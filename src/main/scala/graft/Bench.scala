@@ -526,9 +526,10 @@ object Bench {
     val reasons = adjudicationReasons(armCores, scalingEff, pinned, armSamples)
     val scalingValid = reasons.isEmpty
     val invalidReasonJson =
-      if (scalingValid) "null" else "\"" + reasons.mkString("; ") + "\""
+      if (scalingValid) "null" else JsonString.quote(reasons.mkString("; "))
     val samplesJson = armSamples.map(_.json).mkString("[", ",", "]")
-    val noteJson = note.map(n => s""","note":"$n"""").getOrElse("")
+    val noteJson =
+      note.map(n => s""","note":${JsonString.quote(n)}""").getOrElse("")
     s"""{"cores_small":${armCores(0)},"cores_large":${armCores(1)},"n":$scaleN,"pinned":$pinned,"sec_small":${f"${armSecs(0)}%.3f"},"sec_large":${f"${armSecs(1)}%.3f"},"urls_per_sec_small":${(scaleN / armSecs(0)).toLong},"urls_per_sec_large":${(scaleN / armSecs(1)).toLong},"efficiency":${f"$scalingEff%.3f"},"valid":$scalingValid,"invalid_reason":$invalidReasonJson,"noise_bounds":{"max_steal_frac":$MaxStealFrac,"max_offarm_busy_frac":$MaxOffarmBusyFrac}$noteJson,"samples":$samplesJson}"""
   }
 
@@ -615,6 +616,42 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     obs.get("rows").asInstanceOf[Long]
   }
+
+  /** Total collector time so far — around each suite sample, so an
+    * inflated sample is attributable to collection pressure vs external
+    * tenancy.
+    */
+  private def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
+  }
+
+  /** One suite sample. `sec` is a measurement only when `ok`: a query
+    * that throws is a failed sample carrying its error.
+    */
+  final case class QuerySample(ok: Boolean, sec: Double, gcMs: Long,
+      error: Option[String])
+
+  /** Times one query end to end through [[force]] (a bare count() would
+    * let Catalyst prune the plan, and a projection that throws would pass).
+    */
+  def runQuery(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): QuerySample = {
+    val g0 = gcMs
+    val (error, sec) = timed {
+      try { force(fn(spark, sfDir)); None }
+      catch { case scala.util.control.NonFatal(t) => Some(t.toString) }
+    }
+    spark.catalog.clearCache() // queries may persist intermediates
+    QuerySample(error.isEmpty, sec, gcMs - g0, error)
+  }
+
+  /** A query's headline time: its fastest SUCCESSFUL sample (min(first,
+    * rerun) when both ran), none when every sample failed.
+    */
+  def headlineSec(samples: Seq[QuerySample]): Option[Double] =
+    samples.filter(_.ok).map(_.sec).minOption
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -714,26 +751,9 @@ object Bench {
         .containmentExcerptShingles(spark, sfDir).count()
     }
 
-    // Per-sample GC attribution (r4 verdict "What's missing" #4): total
-    // collector time around each run, so an inflated sample is
-    // attributable to collection pressure vs external tenancy.
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-    case class QuerySample(sec: Double, gcMs: Long)
-    def runQuery(fn: (SparkSession, String) => DataFrame): QuerySample = {
-      val g0 = gcMs
-      val (_, sec) = timed {
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-      }
-      spark.catalog.clearCache() // queries may persist intermediates
-      QuerySample(sec, gcMs - g0)
-    }
     val firstPass = scala.collection.mutable.LinkedHashMap[String, QuerySample]()
     SparkEntry.queries.foreach { case (name, fn) =>
-      firstPass(name) = runQuery(fn)
+      firstPass(name) = runQuery(spark, sfDir, fn)
     }
     // SUITE self-adjudication (r4 verdict #1): the scaling arms carry
     // per-run noise brackets + corroboration, but the suite recorded ONE
@@ -749,18 +769,27 @@ object Bench {
     val rerunNames = firstPass.toSeq.sortBy(-_._2.sec)
       .take(RerunCount).map(_._1)
     val rerunSamples = rerunNames
-      .map(n => n -> runQuery(SparkEntry.queries(n))).toMap
+      .map(n => n -> runQuery(spark, sfDir, SparkEntry.queries(n))).toMap
+    // a query with no successful sample has no time: it lands in
+    // failed_queries with its error, never in the headline map
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    firstPass.foreach { case (name, s) =>
-      results(name) = rerunSamples.get(name)
-        .map(r => math.min(s.sec, r.sec)).getOrElse(s.sec)
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    firstPass.foreach { case (name, f) =>
+      headlineSec(f +: rerunSamples.get(name).toSeq) match {
+        case Some(sec) => results(name) = sec
+        case None => failed(name) = f.error.getOrElse("")
+      }
     }
     val suiteRerunJson = rerunNames.map { name =>
       val f = firstPass(name); val r = rerunSamples(name)
-      val inflated = suiteSampleInflated(f.sec, r.sec)
+      val inflated = f.ok && r.ok && suiteSampleInflated(f.sec, r.sec)
       s""""$name":{"first":${f"${f.sec}%.3f"},"rerun":${f"${r.sec}%.3f"},""" +
+        s""""first_ok":${f.ok},"rerun_ok":${r.ok},""" +
         s""""first_gc_ms":${f.gcMs},"rerun_gc_ms":${r.gcMs},""" +
         s""""inflated":$inflated}"""
+    }.mkString("{", ",", "}")
+    val failedJson = failed.map { case (n, err) =>
+      JsonString.quote(n) + ":" + JsonString.quote(err)
     }.mkString("{", ",", "}")
     // stages are NOT queries: the queries map is exactly the oracled
     // surface (1:1 with CORRECTNESS — r4 verdict #2); one-time index
@@ -786,48 +815,16 @@ object Bench {
     val ivfKmRecall = graft.operators.TrainingOps.ivfKmeansRecallAtK(spark, sfDir)
     val ivfKmRecallC =
       graft.operators.TrainingOps.ivfKmeansRecallClustered(spark, sfDir)
-    // PQ-ADC (round 4): what ranking on 4-byte codes instead of 256-byte
-    // vectors costs in recall — the ×64-compression scale path's honesty dial
-    val pqRecall = graft.operators.TrainingOps.pqRecallAtK(spark, sfDir)
-    // ...and what the R=50 exact re-rank pass buys back over raw codes
-    val pqRerankRecall =
-      graft.operators.TrainingOps.pqRerankRecallAtK(spark, sfDir)
     // SQ8 (8 bits/dim, global affine): the high-fidelity end of the
     // quantization family — should sit far above PQ at the same corpus
     val sqRecall = graft.operators.TrainingOps.sqRecallAtK(spark, sfDir)
     // MRL prefix-then-refine: what a 16-of-64-dim coarse pass + exact
     // re-rank recovers (the adaptive-retrieval economics dial)
     val mrlRecall = graft.operators.TrainingOps.mrlRecallAtK(spark, sfDir)
-    // IVF-PQ composed: coarse-pruning × code-quantization recall, together
-    val ivfPqRecall = graft.operators.TrainingOps.ivfPqRecallAtK(spark, sfDir)
-    // ...and the full stack with the exact top-R refine pass behind it
-    val ivfPqRerankRecall =
-      graft.operators.TrainingOps.ivfPqRerankRecallAtK(spark, sfDir)
-    // residual IVF-PQ (r4 verdict #3): same bytes/vec, codes quantize
-    // x − c(x) and the centroid share of the score is exact — the lift
-    // over ann_ivfpq_recall_at_10 is the residual formulation's value
-    val ivfPqResRecall =
-      graft.operators.TrainingOps.ivfPqResRecallAtK(spark, sfDir)
-    val ivfPqResRerankRecall =
-      graft.operators.TrainingOps.ivfPqResRerankRecallAtK(spark, sfDir)
-    // attribution control: plain (non-residual) ADC at the residual grid —
-    // separates what the finer M×K buys from what the residual
-    // decomposition + exact centroid share buys
-    val pqFineRecall =
-      graft.operators.TrainingOps.pqFineRecallAtK(spark, sfDir)
-    // ...and the same control WITH the IVF prefilter: identical coverage
-    // and code budget as the residual path, so residual-vs-fine-grid is a
-    // one-variable comparison in the record
-    val ivfPqFineRecall =
-      graft.operators.TrainingOps.ivfPqFineRecallAtK(spark, sfDir)
-    // clustered-corpus pair: where residual encoding's theory bites
-    // (x ≈ c + small r), residual vs plain at the same grid/coverage
-    val (ivfPqResClu, ivfPqFineClu) =
-      graft.operators.TrainingOps.ivfPqResRecallClustered(spark, sfDir)
-    // Lloyd-refined residual codebook (one k-means step over the seed
-    // sample): what moving codewords to their capture means buys
-    val ivfPqResKmRecall =
-      graft.operators.TrainingOps.ivfPqResKmeansRecallAtK(spark, sfDir)
+    // the PQ family (TrainingOps.PqVariants): the oracled PQ / IVF-PQ /
+    // residual queries plus the finer-grid and clustered attribution
+    // controls, one ann_*_recall_* key each
+    val pqRecalls = graft.operators.TrainingOps.pqRecalls(spark, sfDir)
     // image-modality retrieval (12×5-bit banded Hamming top-k) vs exact,
     // across the Hamming-1 multi-probe dial (1/3/6 probes per band) — the
     // image sibling of the LSH curve; headline = the default exact dial
@@ -888,8 +885,10 @@ object Bench {
     val imgCurveJson = imgCurve.map { case (p, r, c) =>
       s"""{"probes":$p,"recall":${f"$r%.3f"},"candidates":$c}"""
     }.mkString("[", ",", "]")
+    val pqRecallsJson = pqRecalls.map { case (key, r) =>
+      "\"" + key + "\":" + f"$r%.3f" }.mkString(",")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results)},"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},"ann_recall_at_10":${f"$annRecall%.3f"},"ann_ivf_recall_at_10":${f"$ivfRecall%.3f"},"ann_ivf_recall_clustered":${f"$ivfRecallC%.3f"},"ann_ivf_kmeans_recall_at_10":${f"$ivfKmRecall%.3f"},"ann_ivf_kmeans_recall_clustered":${f"$ivfKmRecallC%.3f"},"ann_pq_recall_at_10":${f"$pqRecall%.3f"},"ann_pq_rerank_recall_at_10":${f"$pqRerankRecall%.3f"},"ann_sq_recall_at_10":${f"$sqRecall%.3f"},"ann_mrl_recall_at_10":${f"$mrlRecall%.3f"},"ann_ivfpq_recall_at_10":${f"$ivfPqRecall%.3f"},"ann_ivfpq_rerank_recall_at_10":${f"$ivfPqRerankRecall%.3f"},"ann_ivfpq_res_recall_at_10":${f"$ivfPqResRecall%.3f"},"ann_ivfpq_res_rerank_recall_at_10":${f"$ivfPqResRerankRecall%.3f"},"ann_pq_finegrid_recall_at_10":${f"$pqFineRecall%.3f"},"ann_ivfpq_finegrid_recall_at_10":${f"$ivfPqFineRecall%.3f"},"ann_ivfpq_res_recall_clustered":${f"$ivfPqResClu%.3f"},"ann_ivfpq_res_kmeans_recall_at_10":${f"$ivfPqResKmRecall%.3f"},"ann_ivfpq_finegrid_recall_clustered":${f"$ivfPqFineClu%.3f"},"ann_image_recall_at_10":${f"$imgRecall%.3f"},"ann_recall_curve":$annCurveJson,"ann_image_recall_curve":$imgCurveJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results)},"failed_queries":$failedJson,"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},"ann_recall_at_10":${f"$annRecall%.3f"},"ann_ivf_recall_at_10":${f"$ivfRecall%.3f"},"ann_ivf_recall_clustered":${f"$ivfRecallC%.3f"},"ann_ivf_kmeans_recall_at_10":${f"$ivfKmRecall%.3f"},"ann_ivf_kmeans_recall_clustered":${f"$ivfKmRecallC%.3f"},"ann_sq_recall_at_10":${f"$sqRecall%.3f"},"ann_mrl_recall_at_10":${f"$mrlRecall%.3f"},$pqRecallsJson,"ann_image_recall_at_10":${f"$imgRecall%.3f"},"ann_recall_curve":$annCurveJson,"ann_image_recall_curve":$imgCurveJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
     // build.sbt sets outputStrategy := StdoutOutput, so this line reaches
     // the driver's stdout tail UNPREFIXED (sbt's "[info] " wrapper broke
     // the driver's parse in rounds 1-2); the file copy stays as the

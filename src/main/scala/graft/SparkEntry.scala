@@ -17,7 +17,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CrawlOps.dedupBootstrap(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  type Query = (SparkSession, String) => DataFrame
+
+  def queries: Map[String, Query] = Map[String, Query](
     // --- crawl/frontier query surface (SURVEY.md §2.3/§2.5/§2.6) ---
     "q_dedup_bootstrap" -> ((s, d) => CrawlOps.dedupBootstrap(s, d)),
     "q_latest_per_source" -> ((s, d) => CrawlOps.latestForSource(s, d)),
@@ -100,15 +102,6 @@ object SparkEntry {
     "q_emb_lsh_topk" -> ((s, d) => TrainingOps.lshBucketTopK(s, d)),
     "q_emb_ivf_topk" -> ((s, d) => TrainingOps.ivfTopK(s, d)),
     "q_emb_ivf_kmeans_topk" -> ((s, d) => TrainingOps.ivfKmeansTopK(s, d)),
-    "q_emb_pq_topk" -> ((s, d) => TrainingOps.pqTopK(s, d)),
-    "q_emb_pq_rerank_topk" -> ((s, d) => TrainingOps.pqRerankTopK(s, d)),
-    "q_emb_ivfpq_topk" -> ((s, d) => TrainingOps.ivfPqTopK(s, d)),
-    "q_emb_ivfpq_rerank_topk" -> ((s, d) => TrainingOps.ivfPqRerankTopK(s, d)),
-    "q_emb_ivfpq_res_topk" -> ((s, d) => TrainingOps.ivfPqResTopK(s, d)),
-    "q_emb_ivfpq_res_rerank_topk" ->
-      ((s, d) => TrainingOps.ivfPqResRerankTopK(s, d)),
-    "q_emb_ivfpq_res_kmeans_topk" ->
-      ((s, d) => TrainingOps.ivfPqResKmeansTopK(s, d)),
     "q_emb_cosine_dups" -> ((s, d) => TrainingOps.cosineNearDups(s, d)),
     "q_emb_semdedup" -> ((s, d) => TrainingOps.semDedup(s, d)),
     "q_emb_sq_topk" -> ((s, d) => TrainingOps.sqTopK(s, d)),
@@ -193,7 +186,8 @@ object SparkEntry {
     "q_video_frames" -> ((s, _) =>
       graft.functions.VideoOps.frameSampleStats(
         graft.model.Fixtures.videos(s, 500L)))
-  )
+  ) ++ TrainingOps.PqVariants.filter(_.oracled).map(v =>
+    v.query -> ((s, d) => TrainingOps.pqTopK(s, d, v.spec)))
 
   /** Where graft.Verify dumps the crawl-tick/image fixture parquet for the
     * DuckDB side of the fixture-backed oracles. Absolute and stable: the

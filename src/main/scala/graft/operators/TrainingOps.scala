@@ -76,6 +76,13 @@ object TrainingOps {
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
+  /** The embeddings as (vec_id, q): the int-quantized frame every ANN path
+    * scores (see [[quantized]]).
+    */
+  def quantizedEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
+    embeddings(spark, sfDir)
+      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+
   /** 60-bit positive hash from md5 hex — engine-portable (see class doc). */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -1756,9 +1763,7 @@ object TrainingOps {
     */
   def bruteForceTopK(spark: SparkSession, sfDir: String,
       k: Int = TopK): DataFrame =
-    bruteForceTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")), k)
+    bruteForceTopKFrom(quantizedEmbeddings(spark, sfDir), k)
 
   /** [[bruteForceTopK]] over any prepared (vec_id, q) frame. `k` is
     * threaded (default [[TopK]]) so rank-fusion callers can keep BOTH
@@ -1789,8 +1794,7 @@ object TrainingOps {
               1, 8), 16, 10).cast("long") % 1001) - 500))
 
   def lshBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sfDir)
     e.join(broadcast(lshPlaneDf(spark)))
       .withColumn("dot", intDot(col("q"), col("plane")))
       .groupBy("vec_id")
@@ -1833,8 +1837,7 @@ object TrainingOps {
     require(probesPerBand >= 1 && probesPerBand <= 5,
       s"probesPerBand must be in 1..5 (exact + up to 4 Hamming-1 flips " +
         s"of a 4-bit band), got $probesPerBand")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sfDir)
     val withBands = e.join(lshBuckets(spark, sfDir), Seq("vec_id"))
       .select(col("vec_id"), col("q"), col("bucket"),
         explode(sequence(lit(0), lit(LshBands - 1))).as("band_idx"))
@@ -1901,8 +1904,7 @@ object TrainingOps {
     */
   def cosineNearDups(spark: SparkSession, sfDir: String,
       maxBroadcastBytes: Long): DataFrame = {
-    val base = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val base = quantizedEmbeddings(spark, sfDir)
     val twins = base.select(
       (col("vec_id") + 100000).as("vec_id"),
       transform(col("q"),
@@ -2072,10 +2074,7 @@ object TrainingOps {
     */
   def ivfAssignments(spark: SparkSession, sfDir: String,
       centroidStride: Long = IvfCentroidStride): DataFrame =
-    ivfAssignmentsFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride)
+    ivfAssignmentsFrom(quantizedEmbeddings(spark, sfDir), centroidStride)
 
   /** Seed centroids: the deterministic stride sample (SQL-expressible). */
   def ivfSeedCentroids(e: DataFrame, centroidStride: Long): DataFrame =
@@ -2154,10 +2153,8 @@ object TrainingOps {
       nprobe: Int = IvfNProbe,
       maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
       : DataFrame =
-    ivfTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
+    ivfTopKFrom(quantizedEmbeddings(spark, sfDir), centroidStride, nprobe,
+      maxProbeBroadcastBytes)
 
   /** Rough serialized bytes of one probe row (query_id, 64×BIGINT qv,
     * centroid_id) — sizes [[ivfTopKFrom]]'s broadcast/shuffle dispatch.
@@ -2202,10 +2199,8 @@ object TrainingOps {
       nprobe: Int = IvfNProbe,
       maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
       : DataFrame =
-    ivfKmeansTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, iters, nprobe, maxProbeBroadcastBytes)
+    ivfKmeansTopKFrom(quantizedEmbeddings(spark, sfDir), centroidStride,
+      iters, nprobe, maxProbeBroadcastBytes)
 
   /** [[ivfKmeansTopK]] over any prepared (vec_id, q) frame.
     *
@@ -2278,36 +2273,48 @@ object TrainingOps {
     topKPerQuery(scored, TopK)
   }
 
-  def ivfRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ivf = ivfTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ivf, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
+  def ivfRecallAtK(spark: SparkSession, sfDir: String): Double =
+    recallVs(bruteForceTopK(spark, sfDir), ivfTopK(spark, sfDir))
 
   // --------------------------------------- PQ (product quantization) ---
 
-  /** PQ dials: the 64-dim vector splits into M=4 subspaces of 16 dims;
+  /** Plain PQ grid: the 64-dim vector splits into M=4 subspaces of 16 dims;
     * each subspace gets K=16 codewords (a deterministic stride sample of
     * corpus subvectors — SQL-expressible, same design choice as the IVF
-    * seeds; k-means-refined codebooks would compose exactly like
-    * [[ivfKmeansCentroidsFrom]]). A vector encodes to M codes = 4 bytes
-    * of index payload vs 64×4 B raw floats — the ×64 memory compression
-    * is the 100 TB story: a corpus whose raw embeddings cannot fit
-    * executor memory scans as codes, with the float vectors left in cold
-    * storage for optional re-ranking.
+    * seeds). A vector encodes to M codes = 4 bytes of index payload vs
+    * 64×4 B raw floats — the ×64 compression is the 100 TB story: a corpus
+    * whose raw embeddings cannot fit executor memory scans as codes, with
+    * the float vectors left in cold storage for optional re-ranking.
     */
   val PqM = 4
-  val PqSubDim = EmbDim / PqM // 16
   val PqK = 16
   val PqCodeStride = 29L // 16 codewords ⇒ max source vec_id 464 (≤ all SFs)
 
+  /** Residual-PQ grid: M=8 subspaces of 8 dims × K=61 codewords ≈ 48 bits
+    * per vector (×42 compression). Measured at sf0.1 uniform, the residual
+    * formulation at the plain grid only buys 0.063 → 0.075 — the coarse
+    * grid's granularity floor dominates — while per-subspace error shrinks
+    * with K^(2/subDim). Stride 8 puts codeword k=0 at vec_id 8, the
+    * smallest corpus id, and K=61 keeps the last one (8·61=488) inside the
+    * 492-row sf0.01 verify corpus; coprime to the centroid stride 31.
+    */
+  val ResPqM = 8
+  val ResPqK = 61
+  val ResPqCodeStride = 8L
+
+  /** Fixed Lloyd iterations for the refined residual codebook — fixed so
+    * the DuckDB oracle unrolls the refinement as CTEs, exactly like
+    * [[ivfKmeansCentroidsFrom]].
+    */
+  val ResPqKmeansIters = 1
+
+  /** Shortlist width for the exact re-rank stage: ADC keeps its top R per
+    * query, the exact int-dot re-scores only those R.
+    */
+  val PqRerankR = 50
+
   /** Codebook (m, k, cw): codeword k of subspace m is dims
-    * [m·subDim, (m+1)·subDim) of the corpus vector with
-    * vec_id = stride·(k+1). Geometry parameterized (defaults = the plain
-    * PQ dials) so the residual variant can run a finer grid over the
-    * same machinery.
+    * [m·subDim, (m+1)·subDim) of the corpus vector with vec_id = stride·(k+1).
     */
   def pqCodebook(e: DataFrame, m: Int = PqM, k: Int = PqK,
       stride: Long = PqCodeStride): DataFrame = {
@@ -2325,8 +2332,7 @@ object TrainingOps {
   /** Corpus → PQ codes (vec_id, codes[M]): per-subspace argmin over the
     * broadcast codebook (min(struct) aggregate, map-side combined — the
     * n×M×K scored pairs reduce to n×M before the shuffle), then the M
-    * codes reassemble in subspace order. Index-build cost: two uniform
-    * vec_id shuffles of (id, small-int) rows.
+    * codes reassemble in subspace order.
     */
   def pqEncode(e: DataFrame, cbook: DataFrame, m: Int = PqM): DataFrame = {
     val subDim = EmbDim / m
@@ -2344,277 +2350,13 @@ object TrainingOps {
         transform(col("mc"), s => s("k")).as("codes"))
   }
 
-  /** PQ-ADC top-k (asymmetric distance computation, the third ANN path):
-    * each query precomputes a LUT of dot(query_sub_m, codeword[m][k]) —
-    * M×K longs — and every corpus vector scores as the sum of M lookups
-    * on its codes: adc ≈ dot(query, corpus), with NO float vector touched
-    * at scan time. Scale shape: the codes frame (4 small ints per vector)
-    * is the only corpus-sized input and it never shuffles before the
-    * two-stage rank; the LUT side is queries × (M·K) longs — broadcast at
-    * the NQueryVecs contract (at real query load the same size-gated
-    * dispatch as [[ivfTopKWithCents]] applies, and IVF composes in front
-    * as the candidate prefilter: IVF-PQ). Integer arithmetic throughout —
-    * the DuckDB oracle replays codebook/encode/LUT/score identically.
-    */
-  def pqTopK(spark: SparkSession, sfDir: String): DataFrame =
-    pqTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def pqTopKFrom(e: DataFrame): DataFrame =
-    topKPerQuery(pqAdcScores(e), TopK).withColumnRenamed("dot", "adc")
-
-  /** The raw ADC scoring stage of [[pqTopKFrom]] — every corpus code
-    * scored against every query's LUT — exposed so [[pqRerankTopKFrom]]
-    * can take a wider shortlist off the same plan.
-    */
-  def pqAdcScores(e: DataFrame, m: Int = PqM, k: Int = PqK,
-      stride: Long = PqCodeStride): DataFrame = {
-    val subDim = EmbDim / m
-    val cbook = pqCodebook(e, m, k, stride)
-    val codes = pqEncode(e, cbook, m)
-    val luts = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-      .join(broadcast(cbook))
-      .withColumn("lv",
-        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
-          col("cw")))
-      .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    codes.join(broadcast(luts))
-      .withColumn("dot",
-        (0 until m).map(mm =>
-          element_at(col("lut"),
-            (col("codes")(mm) + lit(mm * k + 1)).cast("int")))
-          .reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
-  }
-
-  /** Recall@k of PLAIN (non-residual) ADC at the RESIDUAL grid — the
-    * attribution control for [[ivfPqResRecallAtK]]: how much of the
-    * residual path's lift is the finer M×K grid alone vs the residual
-    * decomposition + exact centroid share. Reported in the bench record
-    * so the claim stays attributable.
-    */
-  def pqFineRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val fine = topKPerQuery(
-      pqAdcScores(e, ResPqM, ResPqK, ResPqCodeStride), TopK)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(fine, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Shortlist width for the exact re-rank stage: ADC keeps its top R per
-    * query, the exact int-dot re-scores only those R. R = 5·k trades a
-    * constant-factor exact-scoring cost for most of the recall ADC loses
-    * to 4-bit codes (measured in Bench as `ann_pq_rerank_recall_at_10`).
-    */
-  val PqRerankR = 50
-
-  /** PQ-ADC + exact re-rank — the composition the PQ path is FOR at
-    * scale: the compressed-domain scan (4-byte codes, no float vectors)
-    * produces a per-query shortlist of R candidates, and ONLY those R×|Q|
-    * rows ever touch full vectors again. Scale shape: the shortlist
-    * (query_id, neighbor_id) is tiny → broadcast INTO the corpus scan as
-    * a hash semi-join-with-payload, so the corpus never shuffles and the
-    * full-vector fetch is one narrow pass; query vectors broadcast at the
-    * NQueryVecs contract. Both ranks are the two-stage partial top-k.
-    * Output schema matches [[bruteForceTopK]] (query_id, neighbor_id,
-    * dot, rank) — recall is a direct join, and the DuckDB oracle replays
-    * shortlist → exact dot → re-rank with the same tie order.
-    */
-  def pqRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    pqRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def pqRerankTopKFrom(e: DataFrame): DataFrame =
-    exactRerank(e, topKPerQuery(pqAdcScores(e), PqRerankR))
-
-  /** IVF-PQ — the two scale paths COMPOSED, and the canonical big-corpus
-    * ANN index shape (the FAISS `IVFx,PQy` family): the IVF coarse
-    * quantizer prunes WHICH vectors are scored (only the probed lists),
-    * and PQ compresses WHAT is stored per vector (4-byte codes, not
-    * 256-byte vectors) — so the inverted lists themselves hold codes and
-    * the full-precision corpus is never read at query time at all.
-    *
-    * Index build: the centroid assignment and the PQ encode are both
-    * `groupBy(vec_id)` aggregates, so the (assignment ⋈ codes) zip is a
-    * join of two frames already hash-partitioned on vec_id — no extra
-    * exchange (plan-gated). Query: probes rank the broadcast centroids
-    * (queries × nlist, never corpus rows), each probe row carries its
-    * query's M×K LUT (the two tiny frames join before fanning out), and
-    * the probe side takes the same size-gated broadcast/shuffle-hash
-    * dispatch as [[ivfTopKWithCents]] — above the gate both sides
-    * shuffle on centroid_id, the key the lists were built on. Scoring is
-    * 4 integer LUT lookups per candidate code; ranking is the two-stage
-    * [[topKPerQuery]]. Integer arithmetic throughout; the DuckDB oracle
-    * composes the IVF CTEs in front of the PQ CTEs exactly as the plan
-    * does.
-    */
-  def ivfPqTopK(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfPqTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
-
-  def ivfPqTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    topKPerQuery(
-      ivfPqAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      TopK).withColumnRenamed("dot", "adc")
-
-  /** The raw probed-list ADC scoring stage of [[ivfPqTopKFrom]], exposed so
-    * [[ivfPqRerankTopKFrom]] can take a wider shortlist off the same plan.
-    */
-  def ivfPqAdcScores(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes,
-      pqM: Int = PqM, pqK: Int = PqK, pqStride: Long = PqCodeStride)
-      : DataFrame = {
-    val subDim = EmbDim / pqM
-    val cents = ivfSeedCentroids(e, centroidStride)
-    val nlist = cents.select("centroid_id").count()
-    val cbook = pqCodebook(e, pqM, pqK, pqStride)
-    // the inverted lists store CODES: (centroid_id, vec_id, codes[M]) —
-    // vec_id-copartitioned zip of the two index-build aggregates
-    val lists = ivfAssignmentsWithCents(e, cents)
-      .select("vec_id", "centroid_id")
-      .join(pqEncode(e, cbook, pqM), Seq("vec_id"))
-    val queries = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-    val luts = queries
-      .join(broadcast(cbook))
-      .withColumn("lv",
-        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
-          col("cw")))
-      .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    val effNprobe = math.max(nprobe.toLong, nlist / 8L)
-    val probeBytes = NQueryVecs.toLong * effNprobe * IvfProbeRowBytes
-    val broadcastProbes = probeBytes <= maxProbeBroadcastBytes
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", intL2(col("qv"), col("cv")))
-      .withColumn("nlist",
-        count(lit(1)).over(Window.partitionBy("query_id")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(asc("dist"), asc("centroid_id"))))
-      .filter(col("crank") <=
-        greatest(lit(nprobe.toLong), floor(col("nlist") / lit(8.0)).cast("long")))
-      .select(col("query_id"), col("centroid_id"))
-      // both frames are queries-sized, but the strategy must not depend on
-      // Catalyst's stat estimate (the composed rerank plan inflated it past
-      // the broadcast threshold and fell to SMJ): dispatch on the same gate
-      // as the probe join — broadcast at bounded query load, shuffle-hash
-      // on query_id above it (uniform keys, both sides ~|Q| rows)
-      .join(
-        if (broadcastProbes) broadcast(luts) else luts.hint("shuffle_hash"),
-        Seq("query_id"))
-    val probeSide =
-      if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
-    probeSide.join(lists, Seq("centroid_id"))
-      .withColumn("dot",
-        (0 until pqM).map(m =>
-          element_at(col("lut"),
-            (col("codes")(m) + lit(m * pqK + 1)).cast("int")))
-          .reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
-  }
-
-  /** Recall@k of PLAIN (non-residual) IVF-PQ at the RESIDUAL grid — the
-    * sharper attribution control next to [[pqFineRecallAtK]]: same IVF
-    * coverage, same M×K code budget, only the residual decomposition +
-    * exact centroid share differ from [[ivfPqResRecallAtK]].
-    */
-  def ivfPqFineRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val fine = topKPerQuery(
-      ivfPqAdcScores(e, pqM = ResPqM, pqK = ResPqK,
-        pqStride = ResPqCodeStride), TopK)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(fine, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** IVF-PQ + exact re-rank — the full production ANN stack (FAISS's
-    * `IVFx,PQy` + refine): coarse pruning bounds WHICH codes are scanned,
-    * PQ bounds their SIZE, and the exact pass touches full-precision
-    * vectors for only the ADC top-R per query. The three stages compose
-    * the plans already gated individually: probed-list ADC scan →
-    * two-stage top-R shortlist → [[exactRerank]]'s broadcast fetch-back.
-    */
-  def ivfPqRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def ivfPqRerankTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    exactRerank(e, topKPerQuery(
-      ivfPqAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      PqRerankR))
-
-  /** Residual-PQ code geometry: M=8 subspaces of 8 dims × K=64 codewords
-    * = 48 bits (6 B) of code payload per vector — ×42 compression against
-    * 256 B float vectors, vs the plain path's M=4×K=16 (16 bits). The
-    * finer grid is WHY the residual path recalls materially: measured at
-    * sf0.1 uniform, the residual formulation at the plain dials only buys
-    * 0.063 → 0.075 (the 2-bits-per-16-dims granularity floor dominates
-    * everything), while per-subspace quantization error shrinks with
-    * K^(2/subDim) — ~6 bits over 8 dims is past the knee. Stride 8 puts
-    * the FIRST codeword source row at vec_id 8 — the smallest corpus id
-    * (ids < NQueryVecs are queries; a stride whose first multiple falls
-    * below it silently loses codeword k=0 and misaligns the LUT) — and
-    * K=61 keeps the last one (8·61=488) inside the 492-row sf0.01 verify
-    * corpus; coprime to the centroid stride 31.
-    */
-  val ResPqM = 8
-  val ResPqSubDim = EmbDim / ResPqM // 8
-  val ResPqK = 61
-  val ResPqCodeStride = 8L
-
-  /** Fixed Lloyd iterations for the refined residual codebook — fixed so
-    * the DuckDB oracle unrolls the refinement as CTEs, exactly like
-    * [[ivfKmeansCentroidsFrom]].
-    */
-  val ResPqKmeansIters = 1
-
-  /** Per-subspace Lloyd refinement of a PQ codebook over any prepared
-    * (vec_id, q) frame — the k-means step the seed (stride-sample)
-    * codebook lacks: assign every (vector, subspace) subvector to its
-    * argmin codeword (the same `min(struct)` aggregate as the encode —
-    * map-side combined, never a window), then each codeword moves to the
-    * element-wise floor-mean of its assigned subvectors (subDim `sum`
-    * buffers + a count per (m, k) group; division in double — exact:
-    * |per-dim sum| ≤ 2000·n ≪ 2^53). Codewords that capture nothing
-    * drop (standard Lloyd on sampled seeds — K can only shrink; codes
-    * and LUTs key on the surviving (m, k) pairs either way). Each
-    * iteration costs one corpus×K broadcast-scored argmin plus a
-    * K-group aggregate — the PQ-subspace analog of
-    * [[ivfKmeansCentroidsFrom]]'s shape, same plan gates.
+  /** Per-subspace Lloyd refinement of a PQ codebook: every (vector,
+    * subspace) subvector goes to its argmin codeword (the encode's
+    * `min(struct)` aggregate), then each codeword moves to the element-wise
+    * floor-mean of what it captured (division in double — exact:
+    * |per-dim sum| ≤ 2000·n ≪ 2^53). A codeword that captures nothing
+    * DROPS, so the refined table can hold fewer than M·K rows — which is
+    * why [[adcScores]] reads its LUT by (m, k), never by row position.
     */
   def pqKmeansCodebook(e: DataFrame, m: Int, k: Int, stride: Long,
       iters: Int): DataFrame = {
@@ -2641,239 +2383,225 @@ object TrainingOps {
     cb
   }
 
-  /** RESIDUAL IVF-PQ (r4 verdict #3) — the standard IVF-PQ formulation
-    * (Jégou et al., "Product Quantization for Nearest Neighbor Search",
-    * TPAMI 2011 §IV: encode the residual, not the vector): each corpus
-    * vector stores PQ codes of r = x − c(x), its offset FROM its assigned
-    * centroid, and the inner-product score decomposes exactly as
-    *
-    *   dot(q, x) = dot(q, c(x))  [exact — one integer dot per PROBE, not
-    *                              per candidate: constant within a list]
-    *             + dot(q, r)     [ADC over the residual codebook]
-    *
-    * so the quantization error applies only to the residual mass — the
-    * part of the vector the coarse quantizer did NOT explain — instead of
-    * the whole vector, and the codes run the finer [[ResPqM]]×[[ResPqK]]
-    * grid (see above). Attribution is MEASURED, not assumed (the
-    * finegrid control rows in the bench JSON): on the structure-free
-    * uniform fixture the grid is the lever and residual-vs-plain at the
-    * same grid is inside the 8-query noise band; on the CLUSTERED corpus
-    * (x ≈ c + small r — the data shape the formulation exists for) the
-    * residual path's win is real and recorded
-    * ([[ivfPqResRecallClustered]]). Same
-    * scale shape as the plain path — the residual subtract is one
-    * row-local `zip_with` on the assignment output, the codebook is the
-    * stride sample's RESIDUALS, probes carry one extra long (cdot), and
-    * every join keeps the size-gated broadcast/shuffle-hash dispatch.
-    * Integer arithmetic throughout; the DuckDB oracle inserts a `resid`
-    * CTE and scores `MAX(cdot) + SUM(lv)` per (query, neighbor) — exact
-    * because each vector lives in exactly one list.
+  /** Which vectors a PQ query scores, and what the codes quantize. */
+  sealed trait Coarse
+  object Coarse {
+    /** Every corpus code against every query (no prefilter). */
+    case object Flat extends Coarse
+    /** IVF-PQ (the FAISS `IVFx,PQy` shape): only the probed lists'
+      * codes are scored; the lists store codes of the raw vector.
+      */
+    case object Ivf extends Coarse
+    /** Residual IVF-PQ (Jégou et al., TPAMI 2011 §IV): the lists store
+      * codes of r = x − c(x), and the score decomposes exactly as
+      * dot(q, x) = dot(q, c(x)) [exact, one dot per probe] + dot(q, r)
+      * [ADC] — quantization error applies only to the residual mass.
+      */
+    case object IvfResidual extends Coarse
+  }
+
+  /** One PQ query: the code grid (m subspaces × k codewords, seeded from
+    * every `stride`-th corpus vector), the coarse stage, the Lloyd steps
+    * applied to the codebook, and whether the ADC top-[[PqRerankR]]
+    * shortlist is re-scored exactly.
     */
-  def ivfPqResTopK(spark: SparkSession, sfDir: String,
+  final case class PqSpec(m: Int, k: Int, stride: Long,
+      coarse: Coarse = Coarse.Flat, refineIters: Int = 0,
+      rerank: Boolean = false)
+
+  object PqSpec {
+    val Plain = PqSpec(PqM, PqK, PqCodeStride)
+    val FineGrid = PqSpec(ResPqM, ResPqK, ResPqCodeStride)
+    val Residual = FineGrid.copy(coarse = Coarse.IvfResidual)
+  }
+
+  /** One row of the PQ family table. `name` derives both the oracled
+    * query (`q_emb_<name>_topk`) and the Bench recall key
+    * (`ann_<name>_recall_at_10`, or `..._recall_clustered` on the
+    * planted-cluster corpus); controls are recall-only.
+    */
+  final case class PqVariant(name: String, spec: PqSpec,
+      oracled: Boolean = true, clustered: Boolean = false) {
+    def query: String = s"q_emb_${name}_topk"
+    def recallKey: String =
+      s"ann_${name}_recall_" + (if (clustered) "clustered" else "at_10")
+  }
+
+  /** The PQ family: the seven oracled queries, then the four recall-only
+    * attribution controls — plain codes at the residual grid without and
+    * with IVF (how much of the residual lift is the finer grid alone),
+    * and residual vs plain at that grid on the clustered corpus, the data
+    * shape (x ≈ c + small r) the residual formulation exists for.
+    */
+  val PqVariants: Seq[PqVariant] = {
+    import PqSpec._
+    val ivf = Plain.copy(coarse = Coarse.Ivf)
+    val fineIvf = FineGrid.copy(coarse = Coarse.Ivf)
+    Seq(
+      PqVariant("pq", Plain),
+      PqVariant("pq_rerank", Plain.copy(rerank = true)),
+      PqVariant("ivfpq", ivf),
+      PqVariant("ivfpq_rerank", ivf.copy(rerank = true)),
+      PqVariant("ivfpq_res", Residual),
+      PqVariant("ivfpq_res_rerank", Residual.copy(rerank = true)),
+      PqVariant("ivfpq_res_kmeans",
+        Residual.copy(refineIters = ResPqKmeansIters)),
+      PqVariant("pq_finegrid", FineGrid, oracled = false),
+      PqVariant("ivfpq_finegrid", fineIvf, oracled = false),
+      PqVariant("ivfpq_res", Residual, oracled = false, clustered = true),
+      PqVariant("ivfpq_finegrid", fineIvf, oracled = false,
+        clustered = true))
+  }
+
+  /** The ADC kernel (asymmetric distance computation) of every PQ query:
+    * (query_id, neighbor_id, dot) for each candidate the coarse stage
+    * admits, dot ≈ dot(query, corpus) scored from codes alone.
+    *
+    * Each query precomputes a LUT of dot(query_sub_m, codeword[m][k]) and
+    * a candidate scores as the sum of M lookups on its codes. LUT slot
+    * m·K + k is filled BY KEY from the (m·K + k → value) entries of the
+    * query's aggregate, so it belongs to (m, k) even when Lloyd dropped a
+    * codeword (that slot is null, and no code can point at it).
+    *
+    * Scale shape: the codes frame is the only corpus-sized input; the LUT
+    * side is queries × M·K longs, broadcast. Under IVF the probes rank
+    * the broadcast centroids (queries × nlist, never corpus rows), carry
+    * their query's LUT, and take the same size-gated broadcast /
+    * shuffle-hash dispatch as [[ivfTopKWithCents]] — above the gate both
+    * sides shuffle on centroid_id; the LUT join dispatches on the same
+    * gate, never on Catalyst's stat estimate (the composed rerank plan
+    * once inflated it past the broadcast threshold and fell to SMJ). The
+    * inverted lists zip two `groupBy(vec_id)` aggregates, so that join
+    * adds no exchange. Integer arithmetic throughout; the DuckDB oracle
+    * replays codebook → encode → LUT → probe → score as CTEs.
+    *
+    * A refined codebook (refineIters > 0) is collected once (≤ M·K rows,
+    * broadcast into both consumers anyway) and re-enters the plan as a
+    * local relation — lazily the Lloyd chain would run twice.
+    */
+  def adcScores(e: DataFrame, spec: PqSpec,
       centroidStride: Long = IvfCentroidStride,
       nprobe: Int = IvfNProbe,
       maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfPqResTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
-
-  def ivfPqResTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    topKPerQuery(
-      ivfPqResAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      TopK).withColumnRenamed("dot", "adc")
-
-  /** The probed-list residual-ADC scoring stage of [[ivfPqResTopKFrom]],
-    * exposed for the rerank composition.
-    */
-  def ivfPqResAdcScores(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes,
-      refineIters: Int = 0)
       : DataFrame = {
+    val PqSpec(m, k, stride, coarse, refineIters, _) = spec
+    val subDim = EmbDim / m
+    val residual = coarse == Coarse.IvfResidual
     val cents = ivfSeedCentroids(e, centroidStride)
-    val nlist = cents.select("centroid_id").count()
-    // residual frame: assignment output (already carries q) ⋈ broadcast
-    // centroids, one row-local element-wise subtract — r is the only
-    // vector the PQ stages ever see
-    val resid = ivfAssignmentsWithCents(e, cents)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .select(col("vec_id"), col("centroid_id"),
-        zip_with(col("q"), col("cv"), (a, b) => a - b).as("r"))
-    val residAsQ = resid.select(col("vec_id"), col("r").as("q"))
-    // codebook = the stride sample's residual subvectors, on the FINER
-    // residual grid ([[ResPqM]]×[[ResPqK]]); encode = the shared
-    // per-subspace argmin aggregate, now over residuals. refineIters > 0
-    // Lloyd-refines it ([[pqKmeansCodebook]]); the refined table is
-    // materialized ONCE to the driver (≤ M·K rows, broadcast into both
-    // downstream joins anyway — the same rationale as
-    // [[ivfKmeansTopKFrom]]: lazy, the refinement chain would run twice)
+    // the frame the codes quantize, and each corpus vector's list
+    val (coded, listOf) = coarse match {
+      case Coarse.Flat => (e, None)
+      case Coarse.Ivf =>
+        (e, Some(ivfAssignmentsWithCents(e, cents)
+          .select("vec_id", "centroid_id")))
+      case Coarse.IvfResidual =>
+        val resid = ivfAssignmentsWithCents(e, cents)
+          .join(broadcast(cents), Seq("centroid_id"))
+          .select(col("vec_id"), col("centroid_id"),
+            zip_with(col("q"), col("cv"), (a, b) => a - b).as("q"))
+        (resid.select("vec_id", "q"),
+          Some(resid.select("vec_id", "centroid_id")))
+    }
     val cbook =
-      if (refineIters <= 0)
-        pqCodebook(residAsQ, ResPqM, ResPqK, ResPqCodeStride)
+      if (refineIters <= 0) pqCodebook(coded, m, k, stride)
       else {
-        val refined = pqKmeansCodebook(residAsQ, ResPqM, ResPqK,
-          ResPqCodeStride, refineIters)
-        val rows = refined.collect()
-        val spark = e.sparkSession
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-          refined.schema)
+        val refined = pqKmeansCodebook(coded, m, k, stride, refineIters)
+        e.sparkSession.createDataFrame(
+          java.util.Arrays.asList(refined.collect(): _*), refined.schema)
       }
-    val lists = resid.select("vec_id", "centroid_id")
-      .join(pqEncode(residAsQ, cbook, ResPqM), Seq("vec_id"))
+    val codes = pqEncode(coded, cbook, m)
     val queries = e.filter(col("vec_id") < NQueryVecs)
       .select(col("vec_id").as("query_id"), col("q").as("qv"))
     val luts = queries
       .join(broadcast(cbook))
       .withColumn("lv",
-        intDot(
-          slice(col("qv"), col("m") * ResPqSubDim + lit(1),
-            lit(ResPqSubDim)),
+        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
           col("cw")))
       .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    val effNprobe = math.max(nprobe.toLong, nlist / 8L)
-    val probeBytes = NQueryVecs.toLong * effNprobe * IvfProbeRowBytes
-    val broadcastProbes = probeBytes <= maxProbeBroadcastBytes
-    // probes carry the EXACT centroid share of the score (cdot) — one dot
-    // per (query, probed list), amortized over every candidate in it
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", intL2(col("qv"), col("cv")))
-      .withColumn("cdot", intDot(col("qv"), col("cv")))
-      .withColumn("nlist",
-        count(lit(1)).over(Window.partitionBy("query_id")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(asc("dist"), asc("centroid_id"))))
-      .filter(col("crank") <=
-        greatest(lit(nprobe.toLong), floor(col("nlist") / lit(8.0)).cast("long")))
-      .select(col("query_id"), col("centroid_id"), col("cdot"))
-      .join(
-        if (broadcastProbes) broadcast(luts) else luts.hint("shuffle_hash"),
-        Seq("query_id"))
-    val probeSide =
-      if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
-    probeSide.join(lists, Seq("centroid_id"))
-      .withColumn("dot",
-        col("cdot") + (0 until ResPqM).map(m =>
-          element_at(col("lut"),
-            (col("codes")(m) + lit(m * ResPqK + 1)).cast("int")))
-          .reduce(_ + _))
+      .agg(map_from_entries(collect_list(struct(
+        (col("m") * k + col("k")).cast("int"), col("lv")))).as("lm"))
+      .select(col("query_id"),
+        transform(sequence(lit(0), lit(m * k - 1)), i => col("lm")(i))
+          .as("lut"))
+    val scored = listOf match {
+      case None => codes.join(broadcast(luts))
+      case Some(assigned) =>
+        val nlist = cents.select("centroid_id").count()
+        val effNprobe = math.max(nprobe.toLong, nlist / 8L)
+        val broadcastProbes =
+          NQueryVecs.toLong * effNprobe * IvfProbeRowBytes <=
+            maxProbeBroadcastBytes
+        // residual probes carry the EXACT centroid share of the score —
+        // one dot per (query, probed list), amortized over its candidates
+        val cdot =
+          if (residual) Seq(intDot(col("qv"), col("cv")).as("cdot")) else Nil
+        val probes = queries.join(broadcast(cents))
+          .select(Seq(col("query_id"), col("centroid_id"),
+            intL2(col("qv"), col("cv")).as("dist")) ++ cdot: _*)
+          .withColumn("nlist",
+            count(lit(1)).over(Window.partitionBy("query_id")))
+          .withColumn("crank", row_number().over(
+            Window.partitionBy("query_id")
+              .orderBy(asc("dist"), asc("centroid_id"))))
+          .filter(col("crank") <= greatest(lit(nprobe.toLong),
+            floor(col("nlist") / lit(8.0)).cast("long")))
+          .drop("dist", "nlist", "crank")
+          .join(
+            if (broadcastProbes) broadcast(luts) else luts.hint("shuffle_hash"),
+            Seq("query_id"))
+        val probeSide =
+          if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
+        probeSide.join(assigned.join(codes, Seq("vec_id")), Seq("centroid_id"))
+    }
+    val adc = (0 until m).map(mm =>
+      element_at(col("lut"), (col("codes")(mm) + lit(mm * k + 1)).cast("int")))
+      .reduce(_ + _)
+    scored
+      .withColumn("dot", if (residual) col("cdot") + adc else adc)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
   }
 
-  /** Residual IVF-PQ with the Lloyd-REFINED residual codebook (oracled
-    * as q_emb_ivfpq_res_kmeans_topk): the seed codebook is a stride
-    * SAMPLE of residual subvectors — typical points, not central ones —
-    * and one k-means step moves each codeword to the floor-mean of what
-    * it actually captures, shrinking per-subspace quantization error the
-    * way [[ivfKmeansCentroidsFrom]] does for the coarse quantizer. The
-    * classic k-means SSE-monotonicity law (one step never increases the
-    * total assignment error, up to the integer-floor slack) is spec'd in
-    * ResidualPqSpec; recall measured as
-    * `ann_ivfpq_res_kmeans_recall_at_10`.
+  /** Top-k of one PQ query over any prepared (vec_id, q) frame: the ADC
+    * top-[[TopK]] as (query_id, neighbor_id, adc, rank), or with
+    * `spec.rerank` the ADC top-[[PqRerankR]] re-scored by
+    * [[exactRerank]] as (query_id, neighbor_id, dot, rank).
     */
-  def ivfPqResKmeansTopK(spark: SparkSession, sfDir: String): DataFrame =
-    topKPerQuery(
-      ivfPqResAdcScores(
-        embeddings(spark, sfDir)
-          .select(col("vec_id"), quantized(col("embedding")).as("q")),
-        refineIters = ResPqKmeansIters),
-      TopK).withColumnRenamed("dot", "adc")
-
-  /** Recall@k of the refined-codebook residual stack vs brute force. */
-  def ivfPqResKmeansRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResKmeansTopK(spark, sfDir)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  def pqTopKFrom(e: DataFrame, spec: PqSpec,
+      centroidStride: Long = IvfCentroidStride,
+      nprobe: Int = IvfNProbe,
+      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
+      : DataFrame = {
+    val scores =
+      adcScores(e, spec, centroidStride, nprobe, maxProbeBroadcastBytes)
+    if (spec.rerank) exactRerank(e, topKPerQuery(scores, PqRerankR))
+    else topKPerQuery(scores, TopK).withColumnRenamed("dot", "adc")
   }
 
-  /** Residual IVF-PQ + exact re-rank — [[ivfPqResAdcScores]] composed
-    * with the shared [[exactRerank]] tail (the FAISS `IVFx,PQy` + refine
-    * stack over the residual encoding).
-    */
-  def ivfPqResRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqResRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def ivfPqResRerankTopKFrom(e: DataFrame,
+  def pqTopK(spark: SparkSession, sfDir: String, spec: PqSpec,
       centroidStride: Long = IvfCentroidStride,
       nprobe: Int = IvfNProbe,
       maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
       : DataFrame =
-    exactRerank(e, topKPerQuery(
-      ivfPqResAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      PqRerankR))
+    pqTopKFrom(quantizedEmbeddings(spark, sfDir), spec, centroidStride,
+      nprobe, maxProbeBroadcastBytes)
 
-  /** Recall@k of residual IVF-PQ vs exact brute force — what moving the
-    * quantization to residuals buys over [[ivfPqRecallAtK]] at the same
-    * bytes/vector.
+  /** Recall@k of every [[PqVariants]] row vs brute force on the same
+    * corpus, keyed by `recallKey`.
     */
-  def ivfPqResRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Residual vs plain codes at the SAME grid on the CLUSTERED corpus —
-    * the data shape the residual formulation exists for: with real
-    * cluster structure the residual norm is a fraction of the vector
-    * norm (x ≈ c + small r), so quantizing r at the same code budget
-    * is far finer-grained than quantizing x, and the exact cdot term
-    * carries most of the score. On the uniform fixture both paths are
-    * within noise of each other (|Q|=8 resolution — recorded by the
-    * finegrid control rows); this pair is the measured demonstration
-    * that the decomposition pays exactly where its theory says.
-    * Returns (residual, plain-fine) recall@10.
-    */
-  def ivfPqResRecallClustered(spark: SparkSession, sfDir: String)
-      : (Double, Double) = {
-    val e = clusteredCorpus(spark, sfDir)
-    val bf = bruteForceTopKFrom(e).select("query_id", "neighbor_id")
-    val total = bf.count()
-    def rec(df: DataFrame): Double = {
-      val hit = bf.join(df.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id")).count()
-      if (total == 0) 1.0 else hit.toDouble / total
+  def pqRecalls(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    val uniform = quantizedEmbeddings(spark, sfDir)
+    val clustered = clusteredCorpus(spark, sfDir)
+    PqVariants.map { v =>
+      val e = if (v.clustered) clustered else uniform
+      v.recallKey -> recallVs(bruteForceTopKFrom(e), pqTopKFrom(e, v.spec))
     }
-    val res = rec(ivfPqResTopKFrom(e))
-    val plainFine = rec(topKPerQuery(
-      ivfPqAdcScores(e, pqM = ResPqM, pqK = ResPqK,
-        pqStride = ResPqCodeStride), TopK))
-    (res, plainFine)
-  }
-
-  /** Recall@k of the residual stack with the exact refine pass. */
-  def ivfPqResRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResRerankTopK(spark, sfDir)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
   }
 
   /** Exact re-rank of a per-query shortlist: ONLY the shortlist rows ever
     * touch full vectors — the (query_id, neighbor_id) frame broadcasts
     * INTO the corpus scan (hash join, corpus never shuffles), query
     * vectors broadcast at the NQueryVecs contract, exact int-dot, and the
-    * two-stage rank. Shared tail of [[pqRerankTopKFrom]] and
-    * [[ivfPqRerankTopKFrom]].
+    * two-stage rank. Shared tail of [[pqTopKFrom]] and [[mrlTopK]].
     */
   private def exactRerank(e: DataFrame, shortlist: DataFrame): DataFrame = {
     val short = shortlist.select(col("query_id"), col("neighbor_id"))
@@ -2889,59 +2617,12 @@ object TrainingOps {
     topKPerQuery(exact, TopK)
   }
 
-  /** Recall@k of the full IVF-PQ + re-rank stack vs exact brute force. */
-  def ivfPqRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqRerankTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Recall@k of IVF-PQ vs exact brute force — coarse-pruning recall loss
-    * (IVF) × code-quantization recall loss (PQ), measured together.
-    */
-  def ivfPqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Recall@k of the ADC ranking vs exact brute force — the measured cost
-    * of scanning 4-byte codes instead of 256-byte vectors.
-    */
-  def pqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val pq = pqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(pq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
   /** Recall@k of the SQ8 code ranking vs exact — 8 bits/dim keeps the
     * global affine ranking near-faithful (the measured contrast with
     * PQ's 2 bits/dim at the same corpus).
     */
-  def sqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val sq = sqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(sq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Recall@k with the exact re-rank behind the ADC shortlist — what the
-    * R-candidate exact pass buys back vs [[pqRecallAtK]]'s raw codes.
-    */
-  def pqRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val pq = pqRerankTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(pq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
+  def sqRecallAtK(spark: SparkSession, sfDir: String): Double =
+    recallVs(bruteForceTopK(spark, sfDir), sqTopK(spark, sfDir))
 
   /** A deterministically CLUSTERED quantized corpus with the same row set
     * as the embeddings table: vector v belongs to cluster v mod 32; its
@@ -2972,15 +2653,11 @@ object TrainingOps {
     */
   def ivfRecallClustered(spark: SparkSession, sfDir: String): Double = {
     val e = clusteredCorpus(spark, sfDir)
-    val bf = bruteForceTopKFrom(e).select("query_id", "neighbor_id")
-    val ivf = ivfTopKFrom(e).select("query_id", "neighbor_id")
-    val hit = bf.join(ivf, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+    recallVs(bruteForceTopKFrom(e), ivfTopKFrom(e))
   }
 
-  /** recall@k of each ANN variant vs the exact top-k on the same frame. */
-  private def recallVs(bf: DataFrame, approx: DataFrame): Double = {
+  /** recall@k of an ANN result vs the exact top-k on the same frame. */
+  def recallVs(bf: DataFrame, approx: DataFrame): Double = {
     val truth = bf.select("query_id", "neighbor_id")
     val hit = truth
       .join(approx.select("query_id", "neighbor_id"),
@@ -2996,8 +2673,7 @@ object TrainingOps {
     * uniform-random fixture.
     */
   def ivfKmeansRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sfDir)
     recallVs(bruteForceTopKFrom(e), ivfKmeansTopKFrom(e))
   }
 
@@ -3008,14 +2684,9 @@ object TrainingOps {
   }
 
   def lshRecallAtK(spark: SparkSession, sfDir: String,
-      probesPerBand: Int = 5): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val lsh = lshBucketTopK(spark, sfDir, probesPerBand)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(lsh, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
+      probesPerBand: Int = 5): Double =
+    recallVs(bruteForceTopK(spark, sfDir),
+      lshBucketTopK(spark, sfDir, probesPerBand))
 
   // -------------------------------------------------------------------
   // Sequence packing — the tokenized-corpus → fixed-length-training-rows
@@ -3518,8 +3189,7 @@ object TrainingOps {
     * loss vs the prefix ranking alone) is what the oracle certifies.
     */
   def mrlTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sfDir)
     val withPref = e.withColumn("p", expr(s"slice(q, 1, $MrlPrefixDims)"))
     val queries = broadcast(withPref.filter(col("vec_id") < NQueryVecs)
       .select(col("vec_id").as("query_id"), col("p").as("qp")))
@@ -3532,13 +3202,8 @@ object TrainingOps {
   }
 
   /** Recall@k of the MRL prefix-then-refine stack vs exact search. */
-  def mrlRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val m = mrlTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(m, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
+  def mrlRecallAtK(spark: SparkSession, sfDir: String): Double =
+    recallVs(bruteForceTopK(spark, sfDir), mrlTopK(spark, sfDir))
 
   // ================================ DSIR importance resampling =========
 
@@ -3718,8 +3383,7 @@ object TrainingOps {
     * should sit far above PQ's 2-bit recall at the same corpus.
     */
   def sqTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sfDir)
     val bounds = e.agg(
       min(array_min(col("q"))).as("gmin"),
       max(array_max(col("q"))).as("gmax"))

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
+import graft.JsonString.{quote, unquote}
+
 /** Snapshot-committed frontier/article store — Iceberg *semantics* over
   * partitioned Parquet (SURVEY.md §7.0: no Iceberg runtime jar in
   * /opt/spark/jars, so the table format is implemented here and kept behind
@@ -97,8 +99,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     // escape them, or one '"' in a source name corrupts the manifest and
     // breaks every later parse on the chain (r4 ADVICE #2)
     val fstats = m.fileStats
-      .map(f => s"""{"path": "${esc(f.path)}", "min_source": "${esc(f.minSource)}", """ +
-        s""""max_source": "${esc(f.maxSource)}", "rows": ${f.rows}}""")
+      .map(f => s"""{"path": ${quote(f.path)}, "min_source": ${quote(f.minSource)}, """ +
+        s""""max_source": ${quote(f.maxSource)}, "rows": ${f.rows}}""")
       .mkString("[", ", ", "]")
     s"""{
        |  "snapshot_id": ${m.snapshotId},
@@ -118,35 +120,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
        |}""".stripMargin
   }
 
-  /** JSON string-escape for manifest fields holding user data. */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case c => c.toString
-    }
-
-  /** Inverse of [[esc]] — single left-to-right pass so `\\"` decodes to
-    * `\"` (a backslash then a quote), never to a bare quote.
-    */
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        b.append(s(i + 1) match {
-          case 'n' => '\n'
-          case c => c
-        })
-        i += 2
-      } else { b.append(s(i)); i += 1 }
-    }
-    b.toString
-  }
-
   private def parse(json: String): Manifest = {
-    // minimal, dependency-free parser for the fixed manifest shape
+    // minimal regex parser for the fixed manifest shape
     def num(key: String): Long = {
       val m = s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json)
       m.map(_.group(1).toLong).getOrElse(
@@ -164,11 +139,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
         .map(_.group(1).toLong).getOrElse(0L)
     val bloomItems = numOpt("bloom_items_per_segment")
     // optional (absent in pre-stats manifests): per-file column bounds.
-    // The array is rendered on one line; GREEDY `.*` (no DOTALL) reaches
-    // that line's last ']' — the array close — so a ']' inside an escaped
-    // source string cannot truncate the block. Field values match escaped
-    // strings ((?:[^"\\]|\\.)*) and are unescaped — see [[esc]].
-    val fsBlock = """"file_stats"\s*:\s*\[(.*)\]""".r
+    // The array is rendered on one line (the encoder escapes every control
+    // character); GREEDY `.*` (no DOTALL; `(?d)`: only '\n' ends a line)
+    // reaches that line's last ']' — the array close — so a ']' inside an
+    // escaped source string cannot truncate the block. Field values match
+    // escaped strings ((?:[^"\\]|\\.)*) and decode through jackson.
+    val fsBlock = """(?d)"file_stats"\s*:\s*\[(.*)\]""".r
       .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
     val qs = """((?:[^"\\]|\\.)*)""" // an escaped JSON string body
     val fileStats =
@@ -176,7 +152,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
         s""""max_source":\\s*"$qs",\\s*"rows":\\s*(\\d+)\\}""").r
         .findAllMatchIn(fsBlock)
         .map(m => FrontierStore.FileStat(
-          unesc(m.group(1)), unesc(m.group(2)), unesc(m.group(3)),
+          unquote(m.group(1)), unquote(m.group(2)), unquote(m.group(3)),
           m.group(4).toLong))
         .toSeq
     Manifest(

@@ -111,7 +111,9 @@ class FileStatsSpec extends SparkTestBase {
       "value with quotes, backslashes and brackets round-trips and the " +
       "chain stays parseable (r4 ADVICE #2)") {
     val store = freshStore("target/test-store-fstats6")
-    val hostile = """al"p\h]a"""
+    // plus CR, tab and a raw control character: the manifest line must
+    // stay one line and valid JSON
+    val hostile = "al\"p\\h]a\r\t\u0001z"
     val m = store.commit(spark,
       spark.range(0, 25)
         .select(concat(lit("https://x.example.com/a/"),

@@ -8,6 +8,14 @@ import graft.operators.TrainingOps
   * guard — the two VERDICT-r1 gaps in the similarity/near-dup family.
   */
 class LshAnnSpec extends SparkTestBase {
+  import TrainingOps.{Coarse, PqSpec}
+  import PqSpec.Plain
+
+  private val IvfPq = Plain.copy(coarse = Coarse.Ivf)
+
+  private def recall(e: org.apache.spark.sql.DataFrame, spec: PqSpec): Double =
+    TrainingOps.recallVs(TrainingOps.bruteForceTopKFrom(e),
+      TrainingOps.pqTopKFrom(e, spec))
 
   test("bucket-local top-k output shape matches brute force; exact on shared candidates") {
     val lsh = TrainingOps.lshBucketTopK(spark, sf())
@@ -93,8 +101,7 @@ class LshAnnSpec extends SparkTestBase {
   test("Lloyd-refined IVF: still a partition with exact dots; refinement " +
       "lifts uniform-fixture recall at the same coverage") {
     val cents = TrainingOps.ivfKmeansCentroidsFrom(
-      TrainingOps.embeddings(spark, sf())
-        .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q")))
+      TrainingOps.quantizedEmbeddings(spark, sf()))
     // refinement keeps seed identity and can only DROP empty lists
     val seedN = TrainingOps.embeddings(spark, sf())
       .filter(col("vec_id") >= TrainingOps.NQueryVecs)
@@ -131,15 +138,14 @@ class LshAnnSpec extends SparkTestBase {
 
   test("PQ re-rank: results come from the ADC shortlist, dots are exact, " +
       "and the exact pass lifts recall over raw codes") {
-    val rer = TrainingOps.pqRerankTopK(spark, sf())
+    val rer = TrainingOps.pqTopK(spark, sf(), Plain.copy(rerank = true))
     val bf = TrainingOps.bruteForceTopK(spark, sf())
     assert(rer.columns.toSeq === bf.columns.toSeq)
     // containment law: the re-rank stage only re-scores, never widens —
     // every output pair must be inside the ADC top-R shortlist
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val short = TrainingOps.topKPerQuery(
-      TrainingOps.pqAdcScores(e), TrainingOps.PqRerankR)
+      TrainingOps.adcScores(e, Plain), TrainingOps.PqRerankR)
       .select("query_id", "neighbor_id")
     assert(rer.select("query_id", "neighbor_id")
       .join(short, Seq("query_id", "neighbor_id"), "left_anti")
@@ -153,8 +159,8 @@ class LshAnnSpec extends SparkTestBase {
     assert(joined.filter(col("rr_dot") =!= col("dot")).count() === 0)
     // the point of the composition: exact re-ranking of the R-candidate
     // shortlist recovers recall that raw 4-bit codes lose
-    val rawRecall = TrainingOps.pqRecallAtK(spark, sf())
-    val rerRecall = TrainingOps.pqRerankRecallAtK(spark, sf())
+    val rawRecall = recall(e, Plain)
+    val rerRecall = recall(e, Plain.copy(rerank = true))
     assert(rerRecall >= rawRecall,
       f"re-rank recall $rerRecall%.3f fell below raw ADC $rawRecall%.3f")
     assert(rer.select("query_id").distinct().count() ===
@@ -163,14 +169,13 @@ class LshAnnSpec extends SparkTestBase {
 
   test("IVF-PQ: candidates come only from probed lists, ADC scores match " +
       "the flat-PQ scorer, and both dispatch paths agree") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val res = TrainingOps.ivfPqTopK(spark, sf())
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
+    val res = TrainingOps.pqTopK(spark, sf(), IvfPq)
     // scoring-integrity law: each returned pair's adc equals the flat-PQ
     // ADC for that pair — the IVF stage only restricts the candidate set,
     // never changes the scoring (a left join that finds a NULL means
     // IVF-PQ surfaced a pair the PQ scorer can't even produce)
-    val flatAdc = TrainingOps.pqAdcScores(e)
+    val flatAdc = TrainingOps.adcScores(e, Plain)
       .withColumnRenamed("dot", "flat_adc")
     val joined = res.select(col("query_id"), col("neighbor_id"),
         col("adc"))
@@ -186,7 +191,7 @@ class LshAnnSpec extends SparkTestBase {
       Seq("query_id", "neighbor_id", "adc", "rank"))
     // dispatch parity: probe side broadcast (default) vs shuffle-hash
     // (gate at 0) must produce the identical result set
-    val forced = TrainingOps.ivfPqTopK(spark, sf(),
+    val forced = TrainingOps.pqTopK(spark, sf(), IvfPq,
       maxProbeBroadcastBytes = 0L)
     assert(res.collect().map(_.toSeq).toSet ===
       forced.collect().map(_.toSeq).toSet, "IVF-PQ dispatch paths disagree")
@@ -194,14 +199,13 @@ class LshAnnSpec extends SparkTestBase {
 
   test("IVF-PQ + re-rank full stack: shortlist containment, exact dots, " +
       "and the refine pass never loses recall vs raw IVF-PQ") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val full = TrainingOps.ivfPqRerankTopK(spark, sf())
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
+    val full = TrainingOps.pqTopK(spark, sf(), IvfPq.copy(rerank = true))
     val bf = TrainingOps.bruteForceTopK(spark, sf())
     assert(full.columns.toSeq === bf.columns.toSeq)
     // containment: the refine stage only re-scores the IVF-PQ ADC top-R
     val short = TrainingOps.topKPerQuery(
-      TrainingOps.ivfPqAdcScores(e), TrainingOps.PqRerankR)
+      TrainingOps.adcScores(e, IvfPq), TrainingOps.PqRerankR)
       .select("query_id", "neighbor_id")
     assert(full.select("query_id", "neighbor_id")
       .join(short, Seq("query_id", "neighbor_id"), "left_anti")
@@ -214,8 +218,8 @@ class LshAnnSpec extends SparkTestBase {
     assert(joined.filter(col("rr_dot") =!= col("dot")).count() === 0)
     // the refine pass can only help: candidates are fixed by the coarse+code
     // stages, and exact scoring ranks them at least as faithfully as ADC
-    val raw = TrainingOps.ivfPqRecallAtK(spark, sf())
-    val ref = TrainingOps.ivfPqRerankRecallAtK(spark, sf())
+    val raw = recall(e, IvfPq)
+    val ref = recall(e, IvfPq.copy(rerank = true))
     assert(ref >= raw,
       f"refine pass lost recall: $ref%.3f < raw IVF-PQ $raw%.3f")
     assert(full.select("query_id").distinct().count() ===

@@ -17,9 +17,7 @@ class MrlAnnSpec extends SparkTestBase {
 
   /** The coarse stage replayed standalone: prefix-dim ranking. */
   private def coarseTopK(k: Int) = {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"),
-        TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
       .withColumn("p", expr(s"slice(q, 1, ${TrainingOps.MrlPrefixDims})"))
     val queries = broadcast(e.filter(col("vec_id") < TrainingOps.NQueryVecs)
       .select(col("vec_id").as("query_id"), col("p").as("qp")))

@@ -13,6 +13,9 @@ import graft.operators.{CrawlOps, ScanOps, TrainingOps}
   * not just slows the bench.
   */
 class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+  import TrainingOps.{Coarse, PqSpec}
+
+  private val IvfPq = PqSpec.Plain.copy(coarse = Coarse.Ivf)
 
   private def planString(df: DataFrame): String = {
     val qe = castToImpl(df).queryExecution
@@ -79,7 +82,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         TrainingOps.bruteForceTopK(spark, sf()),
         TrainingOps.lshBucketTopK(spark, sf()),
         TrainingOps.ivfTopK(spark, sf()),
-        TrainingOps.pqTopK(spark, sf()),
+        TrainingOps.pqTopK(spark, sf(), PqSpec.Plain),
         TrainingOps.imageHammingTopK(spark))) {
       val p = planString(df)
       // the partial stage partitions by (query_id, __subq); a regression back
@@ -110,8 +113,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("PQ: codebook and LUT broadcast; encode argmin is an aggregate, not a window") {
     import org.apache.spark.sql.functions.col
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val pEnc = planString(TrainingOps.pqEncode(e, TrainingOps.pqCodebook(e)))
     assert(pEnc.contains("BroadcastNestedLoopJoin") || pEnc.contains("BroadcastExchange"),
       "codebook not broadcast:\n" + pEnc)
@@ -120,14 +122,15 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // would shuffle all n×M×K scored pairs (the collect_list reassembly
     // window over (vec_id, m) is NOT present either — it's an aggregate)
     assert(!pEnc.contains("Window"), "encode regressed to a rank window:\n" + pEnc)
-    val pTop = planString(TrainingOps.pqTopK(spark, sf()))
+    val pTop = planString(TrainingOps.pqTopK(spark, sf(), PqSpec.Plain))
     assert(!pTop.contains("CartesianProduct"), pTop)
     assert(!pTop.contains("SortMergeJoin"),
       "ADC scan joined by SMJ (LUT side should broadcast):\n" + pTop)
     // the re-rank composition keeps the same discipline: the shortlist and
     // query vectors broadcast INTO the corpus scan — the corpus-sized side
     // must never sort-merge or shuffle for the full-vector fetch-back
-    val pRer = planString(TrainingOps.pqRerankTopK(spark, sf()))
+    val pRer = planString(TrainingOps.pqTopK(spark, sf(),
+      PqSpec.Plain.copy(rerank = true)))
     assert(!pRer.contains("CartesianProduct"), pRer)
     assert(!pRer.contains("SortMergeJoin"),
       "re-rank fetch-back joined by SMJ (shortlist should broadcast):\n" + pRer)
@@ -135,7 +138,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("IVF-PQ: no cartesian, no rank window in the index build, and the " +
       "probe join keeps the size-gated broadcast/SHJ dispatch") {
-    val pD = planString(TrainingOps.ivfPqTopK(spark, sf()))
+    val pD = planString(TrainingOps.pqTopK(spark, sf(), IvfPq))
     assert(!pD.contains("CartesianProduct"), pD)
     // the only Window nodes allowed are the probe ranking (queries × nlist)
     // and the two-stage top-k — the corpus-sized encode/assign stages must
@@ -145,7 +148,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "corpus-sized rank window appeared in the IVF-PQ index build:\n" + pD)
     assert(!pD.contains("ShuffledHashJoin"),
       "default dispatch unexpectedly shuffled the probe join:\n" + pD)
-    val pF = planString(TrainingOps.ivfPqTopK(spark, sf(),
+    val pF = planString(TrainingOps.pqTopK(spark, sf(), IvfPq,
       maxProbeBroadcastBytes = 0L))
     assert(pF.contains("ShuffledHashJoin"),
       "probe join is not SHJ with the gate at 0:\n" + pF)
@@ -155,7 +158,8 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // allowed is the inverted-lists build zip on vec_id: both inputs are
     // groupBy(vec_id) aggregates already hash-partitioned on the key, so
     // that join is an exchange-free co-partitioned merge by construction
-    val pR = planString(TrainingOps.ivfPqRerankTopK(spark, sf()))
+    val pR = planString(TrainingOps.pqTopK(spark, sf(),
+      IvfPq.copy(rerank = true)))
     assert(!pR.contains("CartesianProduct"), pR)
     assert(!pR.contains("SortMergeJoin [neighbor_id") &&
         !pR.contains("SortMergeJoin [query_id"),
@@ -170,21 +174,33 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // vec_id zip-SMJ may legitimately finalize as SHJ) — inspect the
     // fresh plan, as every other gate does implicitly
     spark.catalog.clearCache()
-    val pD = planString(TrainingOps.ivfPqResTopK(spark, sf()))
+    val pD = planString(TrainingOps.pqTopK(spark, sf(), PqSpec.Residual))
     assert(!pD.contains("CartesianProduct"), pD)
     assert(!pD.contains("windowspecdefinition(vec_id"),
       "corpus-sized rank window in the residual index build:\n" + pD)
     assert(!pD.contains("ShuffledHashJoin"),
       "default dispatch unexpectedly shuffled the residual probe join:\n" + pD)
-    val pF = planString(TrainingOps.ivfPqResTopK(spark, sf(),
+    val pF = planString(TrainingOps.pqTopK(spark, sf(), PqSpec.Residual,
       maxProbeBroadcastBytes = 0L))
     assert(pF.contains("ShuffledHashJoin"),
       "residual probe join is not SHJ with the gate at 0:\n" + pF)
-    val pR = planString(TrainingOps.ivfPqResRerankTopK(spark, sf()))
+    val pR = planString(TrainingOps.pqTopK(spark, sf(),
+      PqSpec.Residual.copy(rerank = true)))
     assert(!pR.contains("CartesianProduct"), pR)
     assert(!pR.contains("SortMergeJoin [neighbor_id") &&
         !pR.contains("SortMergeJoin [query_id"),
       "residual refine fetch-back joined by SMJ:\n" + pR)
+  }
+
+  test("PQ family: no plan reads an RDD — the Lloyd-refined codebook " +
+      "re-enters the plan as a local relation") {
+    val pq = SparkEntry.queries.keys.filter(_.matches("q_emb_.*pq.*")).toSeq
+    assert(pq.size == 7, pq)
+    for (name <- pq.sorted) {
+      val p = planString(SparkEntry.queries(name)(spark, sf()))
+      assert(!p.contains("LogicalRDD") && !p.contains("Scan ExistingRDD"),
+        s"$name plans over an RDD:\n" + p)
+    }
   }
 
   test("IVF probe join is size-dispatched: broadcast by default, " +
@@ -208,8 +224,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("IVF k-means refinement: every Lloyd iteration is aggregates over a " +
       "broadcast-scored argmin — no window, no cartesian; dispatch holds") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val pC = planString(TrainingOps.ivfKmeansCentroidsFrom(e))
     // assign = min(struct) argmin, update = per-dim sums + count: the whole
     // refinement must plan as (broadcast join → partial agg → final agg)

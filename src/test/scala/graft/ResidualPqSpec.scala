@@ -21,11 +21,14 @@ import graft.operators.TrainingOps
   *  3. DISPATCH PARITY: forcing the probe joins off the broadcast path
   *     (gate = 0) yields identical rows — the 100 TB shuffle-hash path
   *     computes the same answer.
+  *  4. LUT BY (m, k): a Lloyd step that drops codewords leaves every
+  *     score equal to a scorer that joins the LUT relationally.
   */
 class ResidualPqSpec extends SparkTestBase {
-  import spark.implicits._
+  import TrainingOps.{Coarse, PqSpec}
+  import PqSpec.Residual
 
-  private lazy val res = TrainingOps.ivfPqResTopK(spark, sf()).cache()
+  private lazy val res = TrainingOps.pqTopK(spark, sf(), Residual).cache()
 
   test("result shape: every query returns exactly k contiguous ranks") {
     val k = TrainingOps.TopK
@@ -37,9 +40,8 @@ class ResidualPqSpec extends SparkTestBase {
 
   test("exact-on-codewords: a stride-sample vector reached through its " +
       "probed list scores EXACTLY its integer dot (zero residual error)") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val scored = TrainingOps.ivfPqResAdcScores(e)
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
+    val scored = TrainingOps.adcScores(e, Residual)
     val queries = e.filter(col("vec_id") < TrainingOps.NQueryVecs)
       .select(col("vec_id").as("query_id"), col("q").as("qv"))
     val corpus = e.filter(col("vec_id") >= TrainingOps.NQueryVecs)
@@ -67,7 +69,8 @@ class ResidualPqSpec extends SparkTestBase {
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       bf.join(df.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id")).count().toDouble / total
-    val plain = recallOf(TrainingOps.ivfPqTopK(spark, sf()))
+    val plain = recallOf(TrainingOps.pqTopK(spark, sf(),
+      PqSpec.Plain.copy(coarse = Coarse.Ivf)))
     val resid = recallOf(res)
     assert(resid >= plain,
       s"residual recall $resid < coarse plain recall $plain")
@@ -76,7 +79,11 @@ class ResidualPqSpec extends SparkTestBase {
   test("CLUSTERED corpus: residual codes at least match plain codes at " +
       "the SAME grid and coverage — the data shape where x ≈ c + small r " +
       "makes residual quantization finer-grained by construction") {
-    val (resC, plainC) = TrainingOps.ivfPqResRecallClustered(spark, sf())
+    val e = TrainingOps.clusteredCorpus(spark, sf())
+    def recallOf(spec: PqSpec): Double = TrainingOps.recallVs(
+      TrainingOps.bruteForceTopKFrom(e), TrainingOps.pqTopKFrom(e, spec))
+    val resC = recallOf(Residual)
+    val plainC = recallOf(PqSpec.FineGrid.copy(coarse = Coarse.Ivf))
     assert(resC >= plainC,
       s"clustered residual recall $resC < plain-at-same-grid $plainC — " +
         "the decomposition must not lose where its theory predicts a win")
@@ -91,7 +98,7 @@ class ResidualPqSpec extends SparkTestBase {
 
   test("dispatch parity: the shuffle-hash probe path (broadcast gate 0) " +
       "returns identical rows") {
-    val shuffled = TrainingOps.ivfPqResTopK(spark, sf(),
+    val shuffled = TrainingOps.pqTopK(spark, sf(), Residual,
       maxProbeBroadcastBytes = 0L)
     assert(res.exceptAll(shuffled).isEmpty &&
       shuffled.exceptAll(res).isEmpty,
@@ -102,8 +109,7 @@ class ResidualPqSpec extends SparkTestBase {
       "increase the total per-subspace quantization error (the classic " +
       "SSE monotonicity law, with the integer-floor slack bounded)") {
     import TrainingOps._
-    val e = embeddings(spark, sf())
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sf())
     val cents = ivfSeedCentroids(e, IvfCentroidStride)
     val residAsQ = ivfAssignmentsWithCents(e, cents)
       .join(broadcast(cents), Seq("centroid_id"))
@@ -148,9 +154,61 @@ class ResidualPqSpec extends SparkTestBase {
       bf.join(df.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id")).count().toDouble / total
     val raw = recallOf(res)
-    val reranked = recallOf(TrainingOps.ivfPqResRerankTopK(spark, sf()))
+    val reranked = recallOf(
+      TrainingOps.pqTopK(spark, sf(), Residual.copy(rerank = true)))
     assert(reranked >= raw,
       s"rerank recall $reranked < raw $raw — exact re-scoring of a " +
         "superset shortlist cannot lose hits")
+  }
+
+  test("dropped codeword: when a Lloyd step empties codeword k=1 in every " +
+      "subspace, each kernel score equals the LUT joined on (m, k)") {
+    import TrainingOps._
+    // vec 16 := vec 8. Both seed the residual codebook (k=0 and k=1), so
+    // the two seed codewords are identical in every subspace; the argmin
+    // tie goes to k=0 and k=1 captures nothing — one step drops it, and
+    // every later codeword of the subspace moves up one row
+    val base = quantizedEmbeddings(spark, sf())
+    val e = base
+      .crossJoin(base.filter(col("vec_id") === 8L).select(col("q").as("q8")))
+      .select(col("vec_id"),
+        when(col("vec_id") === 16L, col("q8")).otherwise(col("q")).as("q"))
+      .cache()
+    val cents = ivfSeedCentroids(e, IvfCentroidStride)
+    val resid = ivfAssignmentsWithCents(e, cents)
+      .join(broadcast(cents), Seq("centroid_id"))
+      .select(col("vec_id"), col("cv"),
+        zip_with(col("q"), col("cv"), (a, b) => a - b).as("q"))
+    val residAsQ = resid.select("vec_id", "q")
+    val cb = pqKmeansCodebook(residAsQ, ResPqM, ResPqK, ResPqCodeStride,
+      iters = 1).cache()
+    assert(cb.filter(col("k") === 1L).isEmpty, "fixture must drop k=1")
+    assert(cb.filter(col("k") === 2L).count() == ResPqM.toLong)
+    // reference scorer: every code's LUT entry found by joining on (m, k),
+    // plus the exact centroid share, for every (query, neighbor) pair
+    val subDim = EmbDim / ResPqM
+    val queries = e.filter(col("vec_id") < NQueryVecs)
+      .select(col("vec_id").as("query_id"), col("q").as("qv"))
+    val expected = pqEncode(residAsQ, cb, ResPqM)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "k")))
+      .join(cb, Seq("m", "k"))
+      .crossJoin(queries)
+      .groupBy("query_id", "vec_id")
+      .agg(sum(intDot(slice(col("qv"), col("m") * subDim + lit(1),
+        lit(subDim)), col("cw"))).as("adc"))
+      .join(resid.select("vec_id", "cv"), "vec_id")
+      .join(queries, "query_id")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        (col("adc") + intDot(col("qv"), col("cv"))).as("ref_dot"))
+    val joined = adcScores(e, Residual.copy(refineIters = 1))
+      .join(expected, Seq("query_id", "neighbor_id"), "left")
+    val n = joined.count()
+    assert(n > 0)
+    val wrong = joined
+      .filter(col("ref_dot").isNull || col("dot") =!= col("ref_dot")).count()
+    assert(wrong == 0L, s"$wrong of $n scores read the wrong LUT entry")
+    cb.unpersist()
+    e.unpersist()
+    ()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The scaling record's self-adjudication plumbing (r3 verdict #1, r4
   * run-level refinement): the child's per-run telemetry lines must parse
   * back into samples, the quiet predicate must match the published noise
@@ -10,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * record adjudicates itself invalid with the no-evidence reason (on top
   * of the separate unpinned-fallback reason — Bench.main's `reasons`).
   */
-class ScalingTelemetrySpec extends AnyFunSuite {
+class ScalingTelemetrySpec extends SparkTestBase {
 
   private val childOut =
     """26/08/18 some spark log noise
@@ -230,5 +228,23 @@ class ScalingTelemetrySpec extends AnyFunSuite {
     // evidence exists either way
     assert(!Bench.suiteSampleInflated(31.59, -1.0))
     assert(!Bench.suiteSampleInflated(31.59, 0.0))
+  }
+
+  test("suite samples time through the noop sink: a throwing query " +
+      "records as failed and never becomes the headline") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error}
+    val boom = Bench.runQuery(spark, sf(),
+      (_, _) => throw new IllegalStateException("boom"))
+    assert(!boom.ok && boom.error.exists(_.contains("boom")))
+    // fails only when the projection runs: count() would prune it away
+    val late = Bench.runQuery(spark, sf(), (s, _) =>
+      s.range(3).select(col("id"), raise_error(lit("late")).as("e")))
+    assert(!late.ok && late.error.exists(_.contains("late")))
+    val good = Bench.runQuery(spark, sf(), (s, _) => s.range(3).toDF("id"))
+    assert(good.ok && good.error.isEmpty)
+    // the failed samples are never a time, however fast they returned
+    assert(Bench.headlineSec(Seq(boom, good)) == Some(good.sec))
+    assert(Bench.headlineSec(Seq(good, late)) == Some(good.sec))
+    assert(Bench.headlineSec(Seq(boom, late)).isEmpty)
   }
 }

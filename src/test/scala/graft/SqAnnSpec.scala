@@ -41,8 +41,7 @@ class SqAnnSpec extends SparkTestBase {
 
   test("codes are valid 8-bit values spanning the affine range: every " +
       "component in [0, 255], with both extremes attained corpus-wide") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val bounds = e.agg(
       min(array_min(col("q"))).as("gmin"),
       max(array_max(col("q"))).as("gmax"))
