@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLongArray
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.model.Fixtures
 import graft.pipeline.CrawlTick
@@ -30,21 +36,25 @@ import graft.store.FrontierStore
   * starts. Kill it anywhere; the next run continues from the last manifest.
   *
   * The seen probe is the PRODUCTION path by default: the tick routes
-  * through `SeenProbe.BloomConfirm(store.segments, store.seen)` — the
-  * size-dispatched two-phase plan (broadcast probe for small segment sets,
-  * co-partitioned zip-probe at the 10^10 design point), fed by the store's
-  * persisted per-delta blooms. `--exact-probe` forces the plain join
-  * (debug / tiny stores).
+  * through `store.bloomProbe` — the size-dispatched two-phase plan
+  * (broadcast probe for small segment sets, co-partitioned zip-probe at
+  * the 10^10 design point), fed by the store's persisted per-delta blooms
+  * and dispatched on their footer sizes. `--exact-probe` forces the plain
+  * join (debug / tiny stores).
   *
   * Inputs default to the deterministic fixtures; `--listings=`/`--pages=`
   * (and optionally `--sources=`/`--robots=`) point the SAME pipeline at
   * external parquet with the ListItem / PageRow / SourceSpec / RobotsRule
   * schemas — the lifecycle demo runs over user data, not only fixtures.
-  * External listings are read per tick with a `tick` partition-pruning
-  * filter when a `tick` column exists.
+  * Each external input is opened once per run; listings are filtered per
+  * tick on their `tick` column when one exists.
+  *
+  * The session runs with [[SessionConf]]; no shuffle-partition count is
+  * pinned, so AQE sizes every shuffle, cached ones included, to its data.
   *
   * One JSON metrics line per tick on stdout (snapshot id, rows, dedup
-  * counters, wall seconds) — the structured-metrics contract.
+  * counters, wall seconds, and the Spark `jobs`, `stages` and `tasks`
+  * that tick ran) — the structured-metrics contract.
   *
   * `--compact-every=K` runs BOTH maintenance actions every K ticks: the
   * seen-chain fold (`compact`) and the article small-file rewrite
@@ -69,6 +79,30 @@ import graft.store.FrontierStore
   * remove_orphan_files) driven from the spark-submit lifecycle entrypoint.
   */
 object FrontierMain {
+
+  /** Session settings of the tick loop. The tick's cached and persisted
+    * frames each end in a shuffle; without this setting Spark keeps a
+    * cached plan's final shuffle at `spark.sql.shuffle.partitions`, so
+    * every stage reading the cache runs that many tasks whatever the data
+    * size. With it AQE coalesces those shuffles like any other.
+    */
+  val SessionConf: Map[String, String] = Map(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+
+  /** Counts Spark jobs started, stages completed and tasks ended. */
+  final class SparkCounters extends SparkListener {
+    private val n = new AtomicLongArray(3)
+    override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(0)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      n.incrementAndGet(1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = n.incrementAndGet(2)
+
+    /** (jobs, stages, tasks) so far, once every queued event is counted. */
+    def snapshot(sc: SparkContext): (Long, Long, Long) = {
+      Bridge.drainListeners(sc)
+      (n.get(0), n.get(1), n.get(2))
+    }
+  }
 
   private def flag(args: Array[String], name: String): Option[String] =
     args.collectFirst {
@@ -101,6 +135,7 @@ object FrontierMain {
     val builder = SparkSession.builder()
       .appName("graft-frontier")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(SessionConf)
     val spark = (if (sys.props.get("spark.master").isEmpty)
         builder.master("local[*]") else builder)
       .getOrCreate()
@@ -124,23 +159,26 @@ object FrontierMain {
       .getOrElse(Fixtures.sourceSpecs(nSources).toDF())
     val robots = robotsPath.map(spark.read.parquet(_))
       .getOrElse(Fixtures.robots(nSources).toDF())
+    val listingsAll = listingsPath.map(spark.read.parquet(_))
+    val pagesAll = pagesPath.map(spark.read.parquet(_))
+    val counters = new SparkCounters
+    spark.sparkContext.addSparkListener(counters)
 
     (startTick until startTick + nTicks).foreach { tick =>
       val t0 = System.nanoTime()
-      val listings = listingsPath.map { p =>
-        val df = spark.read.parquet(p)
+      val (jobs0, stages0, tasks0) = counters.snapshot(spark.sparkContext)
+      val listings = listingsAll.map { df =>
         // external multi-tick listing dumps carry a `tick` column; prune it
         if (df.columns.contains("tick"))
           df.filter(org.apache.spark.sql.functions.col("tick") === tick)
             .drop("tick")
         else df
       }.getOrElse(Fixtures.listItemsAt(spark, nSources, 30, tick).toDF())
-      val pages = pagesPath.map(spark.read.parquet(_))
+      val pages = pagesAll
         .getOrElse(Fixtures.pageStore(spark, nSources, maxTick = tick).toDF())
       val probe: SeenProbe =
         if (exactProbe) SeenProbe.Exact(store.seen(spark))
-        else SeenProbe.BloomConfirm(
-          store.segments(spark), store.seen(spark), store.nSegments)
+        else store.bloomProbe(spark)
       val t = CrawlTick.runTick(spark, listings, sources, probe,
         robots, pages, salted)
       // per-row invariant enforcement AT the sink (north rule: pairs are
@@ -168,11 +206,12 @@ object FrontierMain {
         errors = Some(t.errors))
       invRelease()
       t.cleanup() // release the tick's cached intermediates (ADVICE r1)
+      val (jobs1, stages1, tasks1) = counters.snapshot(spark.sparkContext)
       val sec = (System.nanoTime() - t0) / 1e9
       val invJson =
         if (checkInvariants) s""","invariant_violations":$nViolations""" else ""
       println(
-        s"""{"tick":$tick,"snapshot":${m.snapshotId},"new_articles":${m.newArticles},"skipped":${m.skipped},"errors":${m.errors},"segments":${m.segmentCounts.size},"probe":"${if (exactProbe) "exact" else "bloom"}"$invJson,"sec":${f"$sec%.2f"}}""")
+        s"""{"tick":$tick,"snapshot":${m.snapshotId},"new_articles":${m.newArticles},"skipped":${m.skipped},"errors":${m.errors},"segments":${m.segmentCounts.size},"probe":"${if (exactProbe) "exact" else "bloom"}"$invJson,"jobs":${jobs1 - jobs0},"stages":${stages1 - stages0},"tasks":${tasks1 - tasks0},"sec":${f"$sec%.2f"}}""")
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {
         import org.apache.spark.sql.functions.{col, lit}
         // age basis = the committing TICK (crawl_tick), not the per-host

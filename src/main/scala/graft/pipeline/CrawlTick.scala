@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -189,11 +189,24 @@ object CrawlTick {
   }
 
   /** One tick's outputs plus an explicit cache-release hook. The tick
-    * `.cache()`s two multiply-consumed intermediates; a long-running driver
-    * looping ticks MUST call `cleanup()` after materializing (committing)
-    * the outputs, or cached blocks accumulate across ticks (ADVICE r1).
-    * [[run]] keeps the old shape for single-shot callers whose caches die
-    * with the session.
+    * `.cache()`s two multiply-consumed intermediates — `flagged` (every
+    * listing row with its gates) and `deduped` (the claimed candidates
+    * after the fetch join and both rank windows) — and the seen probe
+    * persists its flagged candidates. `emitted`, `stats` and `errors` all
+    * read those caches, so FrontierStore.commit evaluates the tick once,
+    * in its first write; `stats` is one aggregate over them.
+    *
+    * Each cache ends in a shuffle. Spark keeps a cached plan's final
+    * shuffle at `spark.sql.shuffle.partitions` (200 tasks for every stage
+    * that reads it) unless
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is set;
+    * FrontierMain sets it (FrontierMain.SessionConf), so AQE coalesces
+    * those shuffles to the data at every scale.
+    *
+    * A long-running driver looping ticks MUST call `cleanup()` after
+    * materializing (committing) the outputs, or cached blocks accumulate
+    * across ticks (ADVICE r1). [[run]] keeps the old shape for single-shot
+    * callers whose caches die with the session.
     *
     * `errors` CAPTURES the failed rows, not just their count (r2 gap #5 —
     * the reference keeps the tracebacks, main.py:342-347): one row per
@@ -210,7 +223,7 @@ object CrawlTick {
       graft.seen.SeenProbe.Exact(seenSnapshot), robots, pages, salted)
 
   /** [[runTick]] with an explicit probe strategy — the production
-    * composition (FrontierMain routes store.segments() through here).
+    * composition (FrontierMain routes store.bloomProbe through here).
     */
   def runTick(spark: SparkSession, listings: DataFrame, sources: DataFrame,
       probe: graft.seen.SeenProbe, robots: DataFrame, pages: DataFrame,
@@ -266,26 +279,21 @@ object CrawlTick {
         to_json(struct(col("source"), col("kind"))).as("metadata"),
         col("source_idx"), col("item_idx"))
 
-    // per-source stats (A1): new/skipped/errors
-    val skips = flagged
-      .groupBy("source")
-      .agg(sum(when(col("skip_reason").isNotNull, 1).otherwise(0)).as("skipped0"))
-    val fetchErrs = deduped
-      .groupBy("source")
-      .agg(
-        sum(when(!col("fetch_ok"), 1).otherwise(0)).as("errors"),
-        sum(when(col("emit") && col("xsrc_rank") =!= 1, 1).otherwise(0))
-          .as("xsrc_losses"),
-        sum(when(col("final_emit"), 1).otherwise(0)).as("new_articles"))
-    val stats = sources.select("source").distinct()
-      .join(skips, Seq("source"), "left")
-      .join(fetchErrs, Seq("source"), "left")
-      .select(
-        col("source"),
-        coalesce(col("new_articles"), lit(0L)).as("new_articles"),
-        (coalesce(col("skipped0"), lit(0L)) +
-          coalesce(col("xsrc_losses"), lit(0L))).as("skipped"),
-        coalesce(col("errors"), lit(0L)).as("errors"))
+    // per-source stats (A1): new/skipped/errors, ONE aggregate over three
+    // tallies — a zero row per source (idle sources report zeros), the
+    // skipped listing rows, and the claimed candidates' outcomes (a
+    // cross-source loss counts skipped)
+    def flag(c: Column): Column = when(c, 1L).otherwise(0L)
+    val tallies = sources.select(col("source"),
+        lit(0L).as("n"), lit(0L).as("s"), lit(0L).as("e"))
+      .unionByName(flagged.filter(col("skip_reason").isNotNull).select(
+        col("source"), lit(0L).as("n"), lit(1L).as("s"), lit(0L).as("e")))
+      .unionByName(deduped.select(col("source"),
+        flag(col("final_emit")).as("n"),
+        flag(col("emit") && col("xsrc_rank") =!= 1).as("s"),
+        flag(!col("fetch_ok")).as("e")))
+    val stats = tallies.groupBy("source").agg(
+      sum("n").as("new_articles"), sum("s").as("skipped"), sum("e").as("errors"))
 
     // C5: error rows captured, not just counted — every claimed candidate
     // whose fetch failed (status ≠ 200 or no page row), with the reason

@@ -65,6 +65,15 @@ object UrlSeen {
     * bottleneck; this path avoids it.)
     */
   def buildSegments(seen: DataFrame, urlCol: String, nSegments: Int,
+      expectedItemsPerSegment: Long, fpp: Double = DefaultFpp): DataFrame =
+    buildSegmentsCounted(seen, urlCol, nSegments, expectedItemsPerSegment, fpp)
+      .drop("n")
+
+  /** [[buildSegments]] plus `n`, the rows each segment's filter absorbed —
+    * the per-segment lineage FrontierStore records, taken from the build
+    * itself instead of a second pass over the input.
+    */
+  def buildSegmentsCounted(seen: DataFrame, urlCol: String, nSegments: Int,
       expectedItemsPerSegment: Long, fpp: Double = DefaultFpp): DataFrame = {
     val spark = seen.sparkSession
     import spark.implicits._
@@ -75,13 +84,15 @@ object UrlSeen {
       .repartition(nSegments, col("seg"))
       .mapPartitions { it =>
         val blooms = scala.collection.mutable.LongMap[BloomFilter]()
+        val counts = scala.collection.mutable.LongMap[Long]().withDefaultValue(0L)
         it.foreach { case (seg, hash) =>
           blooms.getOrElseUpdate(seg,
             BloomFilter.create(expectedItemsPerSegment, fpp)).put(hash)
+          counts(seg) += 1
         }
-        blooms.iterator.map { case (seg, b) => (seg, b.serialize()) }
+        blooms.iterator.map { case (seg, b) => (seg, b.serialize(), counts(seg)) }
       }
-      .toDF("seg", "bloom")
+      .toDF("seg", "bloom", "n")
   }
 
   /** [[buildSegments]] with cuckoo-filter segments (same (seg, bloom)
@@ -291,8 +302,8 @@ object UrlSeen {
     *    by the SAME pmod(xxhash64(url), nSeg), each task materializes only
     *    its own segments' bytes once and streams its candidate split
     *    through them. FrontierStore persists segment blooms in exactly
-    *    this layout (`data/bloom/snap-K/`), so at scale the segment side
-    *    is a parquet scan, not a rebuild.
+    *    this layout (`data/bloom/snap-K-<attempt>/`), so at scale the
+    *    segment side is a parquet scan, not a rebuild.
     *
     * Either way the result is EXACT: phase 2 confirm-joins the
     * Bloom-positive remainder against the true seen table (shuffle-hash,
@@ -427,24 +438,30 @@ object UrlSeen {
     // absorb that; loops (FrontierMain ticks) must use [[flagSeenManaged]].
     case SeenProbe.Exact(_) =>
       flagSeenManaged(candidates, probe, urlCol, flagCol)._1
-    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
+    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes,
+        segmentBytes) =>
       twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = false, cache = false)._1
+        maxBroadcastBytes, segmentBytes, cuckoo = false, cache = false)._1
     case SeenProbe.CuckooConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
       twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = true, cache = false)._1
+        maxBroadcastBytes, None, cuckoo = true, cache = false)._1
   }
 
-  /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3): the
-    * BloomConfirm branch persists two intermediates —
+  /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3). The
+    * BloomConfirm branch persists the flagged (candidates + __maybe) frame,
+    * because it fans out into THREE consumers (the negative branch plus the
+    * semi/anti confirm pair), which would otherwise re-run the full
+    * candidate upstream (listings join, canonicalize, robots) three times.
+    * When the probe carries no `segmentBytes`, the segments frame persists
+    * too: one aggregate measures it for the dispatch, and on the
+    * co-partitioned path the probe job reads it again.
     *
-    *  - the flagged (candidates + __maybe) frame, because it fans out into
-    *    THREE consumers (the negative branch plus the semi/anti confirm
-    *    pair), which would otherwise re-run the full candidate upstream
-    *    (listings join, canonicalize, robots) three times at first
-    *    materialization;
-    *  - the segments frame on the co-partitioned dispatch, where the probe
-    *    job itself still reads it after the size probe.
+    * A probe built by FrontierStore.bloomProbe knows its size from the
+    * Bloom files, so the dispatch runs no Spark job and the segments are
+    * never persisted; the broadcast path then costs one collect job.
+    * Under `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * (FrontierMain sets it) AQE coalesces the persisted frame's shuffle
+    * to the data instead of keeping `spark.sql.shuffle.partitions`.
     *
     * Long-running callers (FrontierMain's tick loop) MUST invoke the hook
     * after materializing the result, or cached blocks accumulate across
@@ -461,36 +478,42 @@ object UrlSeen {
         .withColumn(flagCol, coalesce(col("__s"), lit(false)))
         .drop("__seen_url", "__s")
       (out, () => ())
-    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
+    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes,
+        segmentBytes) =>
       twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = false)
+        maxBroadcastBytes, segmentBytes, cuckoo = false)
     case SeenProbe.CuckooConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
       twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = true)
+        maxBroadcastBytes, None, cuckoo = true)
   }
 
   /** The shared two-phase (approximate prefilter + exact confirm) flag
     * plan behind BloomConfirm and CuckooConfirm — identical dispatch,
     * identical truth table; only the per-row serialized-filter probe
-    * differs.
+    * differs. The dispatch compares `segmentBytes` when the caller knows
+    * it (no Spark job), else one aggregate over the segments; with
+    * `cache`, the flagged candidates persist (see [[flagSeenManaged]]).
     */
   private def twoPhaseFlag(candidates: DataFrame, segments: DataFrame,
       seen: DataFrame, urlCol: String, flagCol: String, nSegments: Int,
-      maxBroadcastBytes: Long, cuckoo: Boolean,
+      maxBroadcastBytes: Long, segmentBytes: Option[Long], cuckoo: Boolean,
       cache: Boolean = true): (DataFrame, () => Unit) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val segsCached = if (cache) segments.persist(lvl) else segments
-    val totalBytes = segsCached
-      .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
-    val (flagged0, segsReleased) =
-      if (totalBytes <= maxBroadcastBytes) {
-        val out = flagMaybeBroadcast(candidates, segsCached, urlCol,
-          nSegments, cuckoo)
-        if (cache) segsCached.unpersist(blocking = false)
-        (out, true)
-      } else
-        (flagMaybeCopartitioned(candidates, segsCached, urlCol, nSegments,
-          cuckoo), false)
+    // persist only when the size must be measured: then both the size
+    // aggregate and the probe read the segments
+    val segsPersisted = cache && segmentBytes.isEmpty
+    val segs = if (segsPersisted) segments.persist(lvl) else segments
+    val totalBytes = segmentBytes.getOrElse(segs
+      .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0))
+    val broadcastPath = totalBytes <= maxBroadcastBytes
+    val flagged0 =
+      if (broadcastPath)
+        flagMaybeBroadcast(candidates, segs, urlCol, nSegments, cuckoo)
+      else
+        flagMaybeCopartitioned(candidates, segs, urlCol, nSegments, cuckoo)
+    // the broadcast path has collected the segments; the zip probe reads
+    // them when the tick runs
+    if (segsPersisted && broadcastPath) segs.unpersist(blocking = false)
     val flagged = if (cache) flagged0.persist(lvl) else flagged0
     val neg = flagged.filter(!col("__maybe"))
       .withColumn(flagCol, lit(false)).drop("__maybe")
@@ -505,21 +528,32 @@ object UrlSeen {
       if (!cache) () => ()
       else () => {
         flagged.unpersist(blocking = false)
-        if (!segsReleased) segsCached.unpersist(blocking = false)
+        if (segsPersisted && !broadcastPath) segs.unpersist(blocking = false)
         ()
       }
     (out, cleanup)
   }
 
+  /** Bloom rows that share a segment id OR-merge (a store's per-delta
+    * chain, passed unmerged); cuckoo segments cannot merge, so one row per
+    * segment is their contract and a later row replaces an earlier one.
+    */
+  private def mergeSegment(prev: Array[Byte], next: Array[Byte],
+      cuckoo: Boolean): Array[Byte] =
+    if (prev == null || cuckoo) next else BloomFilter.mergeSerialized(prev, next)
+
   /** candidates + boolean `__maybe` via the broadcast codegen probe.
-    * NULL urls probe to false (see [[filterUnseenBroadcast]]).
+    * NULL urls probe to false (see [[filterUnseenBroadcast]]). The segment
+    * rows are collected as given (one job when the frame has no shuffle)
+    * and merged on the driver.
     */
   private def flagMaybeBroadcast(candidates: DataFrame, segments: DataFrame,
       urlCol: String, nSegments: Int, cuckoo: Boolean = false): DataFrame = {
     val spark = candidates.sparkSession
     val segsArr = new Array[Array[Byte]](nSegments)
     segments.collect().foreach { r =>
-      segsArr(r.getLong(0).toInt) = r.getAs[Array[Byte]]("bloom")
+      val s = r.getLong(0).toInt
+      segsArr(s) = mergeSegment(segsArr(s), r.getAs[Array[Byte]]("bloom"), cuckoo)
     }
     val bc = spark.sparkContext.broadcast(segsArr)
     val hashExpr = Bridge.expression(urlHash(col(urlCol)))
@@ -546,7 +580,11 @@ object UrlSeen {
     val hIdx = cand.schema.fieldIndex("__h")
     val flaggedRdd = cand.rdd.zipPartitions(segs.rdd) { (candIt, segIt) =>
       val blooms = scala.collection.mutable.LongMap[Array[Byte]]()
-      segIt.foreach(r => blooms(r.getLong(0)) = r.getAs[Array[Byte]](1))
+      segIt.foreach { r =>
+        val s = r.getLong(0)
+        blooms(s) = mergeSegment(blooms.getOrElse(s, null),
+          r.getAs[Array[Byte]](1), cuckoo)
+      }
       candIt.map { r =>
         // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3)
         val maybe = !r.isNullAt(hIdx) && {
@@ -600,12 +638,19 @@ object SeenProbe {
 
   /** Bloom-segment prefilter + exact confirm; dispatches broadcast-probe vs
     * co-partitioned zip-probe on total segment bytes (UrlSeen.flagSeen).
-    * `segments` is FrontierStore.segments() at scale — persisted per-delta
-    * blooms OR-merged, never rebuilt from URLs.
+    * `segments` holds (seg, bloom) rows built from the persisted per-delta
+    * blooms, never rebuilt from URLs; rows sharing a `seg` OR-merge where
+    * the probe loads them, so a store may pass its delta chain unmerged
+    * (FrontierStore.bloomProbe).
+    *
+    * @param segmentBytes the segment bytes the dispatch compares against
+    *                     `maxBroadcastBytes`, when the caller already knows
+    *                     them; None measures them with one aggregate
     */
   final case class BloomConfirm(segments: DataFrame, seen: DataFrame,
       nSegments: Int,
-      maxBroadcastBytes: Long = UrlSeen.DefaultMaxBroadcastSegmentBytes)
+      maxBroadcastBytes: Long = UrlSeen.DefaultMaxBroadcastSegmentBytes,
+      segmentBytes: Option[Long] = None)
     extends SeenProbe
 
   /** Cuckoo-segment prefilter + exact confirm — same dispatch and truth

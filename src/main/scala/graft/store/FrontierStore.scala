@@ -1,13 +1,15 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths,
+  StandardCopyOption}
+import java.util.{Comparator, UUID}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.JsonString.{quote, unquote}
 
@@ -24,29 +26,40 @@ import graft.JsonString.{quote, unquote}
   *    per-partition lineage (frontier-segment id → row count) and the
   *    tick's dedup counters (north rule: "resumable from checkpoint with
   *    per-partition lineage + metrics");
-  *  - data laid out per snapshot: `data/articles/snap-N/` (partitioned by
-  *    `dt`, sorted within partitions by (source, language) — the analog of
-  *    the reference's PARTITION BY DATE(pub_date) CLUSTER BY source,
-  *    language, deploy/create_bigquery_table.sql:26-32);
-  *  - `data/seen/snap-N/` — the canonical-URL delta this tick added,
-  *    hash-partitioned by frontier segment so the URL-seen state reads back
-  *    co-partitioned with the Bloom probe (graft.seen.UrlSeen);
-  *  - `data/bloom/snap-N/` — one Bloom filter per frontier segment built
-  *    from THIS delta only, persisted at commit. Reads OR-merge the
-  *    per-delta blooms (bitwise identical to rebuilding from the full seen
-  *    set — Bloom bit-union is key-union), so tick N never pays a rebuild
-  *    proportional to history (VERDICT r1 "What's missing" #2);
+  *  - data laid out per snapshot: `data/articles/snap-N-<attempt>/`
+  *    (partitioned by `dt`, sorted within partitions by (source, language)
+  *    — the analog of the reference's PARTITION BY DATE(pub_date) CLUSTER
+  *    BY source, language, deploy/create_bigquery_table.sql:26-32). Every
+  *    data directory is unique to the commit attempt that wrote it and is
+  *    named by that attempt's manifest, so two writers racing for
+  *    snapshot N never write into each other's files;
+  *  - `data/seen/snap-N-<attempt>/` — the canonical-URL delta this tick
+  *    added, hash-partitioned by frontier segment so the URL-seen state
+  *    reads back co-partitioned with the Bloom probe (graft.seen.UrlSeen);
+  *  - `data/bloom/snap-N-<attempt>/` — one Bloom filter per frontier
+  *    segment built from THIS delta only, persisted at commit. Reads
+  *    OR-merge the per-delta blooms (bitwise identical to rebuilding from
+  *    the full seen set — Bloom bit-union is key-union), so tick N never
+  *    pays a rebuild proportional to history (VERDICT r1 "What's missing"
+  *    #2);
   *  - `compact()` — rewrites the seen-delta chain into one baseline
   *    snapshot (kind=compaction): subsequent seen()/segments() reads stop
   *    at the baseline, making read cost independent of tick count. Article
   *    history and time-travel are untouched (the compaction snapshot adds
   *    no article data and the article chain keeps walking parents);
-  *  - commits are atomic: manifest written to a temp file and
-  *    ATOMIC_MOVE'd into place — readers either see the whole snapshot or
-  *    none of it. The manifest is the commit point; data files written
-  *    before it are invisible until it lands. A tick that emits ZERO rows
-  *    commits a manifest with no data paths (an empty partitioned parquet
-  *    dir would poison later schema inference — ADVICE r1).
+  *  - commits are atomic and exclusive: the manifest is written to a temp
+  *    file and hard-linked to `snap-N.json`, which fails if that file
+  *    exists — readers either see the whole snapshot or none of it, and a
+  *    second writer that picked the same id gets a [[FrontierStore
+  *    .CommitConflictException]] instead of replacing the winner. The
+  *    manifest is the commit point; data files written before it are
+  *    invisible until it lands. A tick that emits ZERO rows commits a
+  *    manifest with no data paths (an empty partitioned parquet dir would
+  *    poison later schema inference — ADVICE r1).
+  *
+  * Every store table is read with a declared schema, so opening a
+  * snapshot runs no footer-inference job; the article table is the one
+  * exception, because its schema may evolve across the chain.
   *
   * Time-travel: any read takes an optional snapshot id; the manifest chain
   * (parent pointers) gives the file set as of that snapshot.
@@ -253,118 +266,179 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       case _ => bloomItemsPerSegment
     }
 
+  /** A fresh store-relative data directory for one commit attempt of
+    * snapshot `id`: no other attempt, racing or retried, can name it.
+    */
+  private def newDataRel(table: String, id: Int): String =
+    s"data/$table/snap-$id-${UUID.randomUUID()}"
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir))
+      Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+
+  /** Writes `df` to `rel` through `write` and returns its row count, taken
+    * from an Observation on that same write (no extra action). A write of
+    * zero rows leaves nothing behind: its directory is removed.
+    */
+  private def writeCounted(df: DataFrame, rel: String)
+      (write: (DataFrame, String) => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")), root.resolve(rel).toString)
+    val n = obs.get("rows").asInstanceOf[Long]
+    if (n == 0L) deleteTree(root.resolve(rel))
+    n
+  }
+
   /** Writes the seen delta + its per-segment Bloom for snapshot `id`.
-    * Returns (seenRel, bloomRel, segmentCounts).
+    * Returns (seenRel, bloomRel, segmentCounts); the counts come from the
+    * Bloom build's own output, observed on its write.
     */
   private def writeSeenDelta(spark: SparkSession, urls: DataFrame, id: Int,
       itemsPerSegment: Long): (String, String, Map[Int, Long]) = {
-    val seenRel = s"data/seen/snap-$id"
-    val delta = urls.select(col("canonical_url"))
+    val seenRel = newDataRel("seen", id)
+    urls.select(col("canonical_url"))
       .withColumn("seg", segOf(col("canonical_url")))
-    delta
       .repartition(col("seg"))
-      .write.mode(SaveMode.Overwrite)
+      .write
       .partitionBy("seg")
       .parquet(root.resolve(seenRel).toString)
 
     // per-delta Bloom segments (same hash/partitioning as the probe side);
     // built from the just-written parquet so the expensive delta plan above
     // is not recomputed
-    val bloomRel = s"data/bloom/snap-$id"
-    graft.seen.UrlSeen.buildSegments(
-        spark.read.parquet(root.resolve(seenRel).toString),
+    val bloomRel = newDataRel("bloom", id)
+    val obs = Observation()
+    graft.seen.UrlSeen.buildSegmentsCounted(readSeenDir(spark, seenRel),
         "canonical_url", nSegments, itemsPerSegment, bloomFpp)
-      .write.mode(SaveMode.Overwrite)
+      .observe(obs,
+        map_from_entries(collect_list(struct(col("seg"), col("n")))).as("counts"))
+      .select("seg", "bloom")
+      .write
       .parquet(root.resolve(bloomRel).toString)
-
-    val segCounts = spark.read.parquet(root.resolve(seenRel).toString)
-      .groupBy("seg").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val segCounts = obs.get("counts").asInstanceOf[scala.collection.Map[Long, Long]]
+      .map { case (s, n) => s.toInt -> n }.toMap
     (seenRel, bloomRel, segCounts)
   }
 
+  /** Test seam: runs after [[commit]] picks its snapshot id and before it
+    * writes anything, so a spec can interleave a second writer.
+    */
+  @volatile private[graft] var beforeCommitWrites: Int => Unit = _ => ()
+
+  /** Publishes `m` as `snap-N.json` with an exclusive create: the complete
+    * manifest is written to a temp file and hard-linked into place, which
+    * fails if `snap-N.json` exists. The losing attempt removes its own data
+    * directories (unique to it, see [[newDataRel]]) and throws.
+    */
   private def writeManifest(m: Manifest): Manifest = {
     val tmp = Files.createTempFile(snapsDir, s".snap-${m.snapshotId}", ".tmp")
-    Files.writeString(tmp, render(m))
-    Files.move(tmp, manifestPath(m.snapshotId), StandardCopyOption.ATOMIC_MOVE)
+    try {
+      Files.writeString(tmp, render(m))
+      Files.createLink(manifestPath(m.snapshotId), tmp)
+    } catch {
+      case e: FileAlreadyExistsException =>
+        dataPaths(m).foreach(rel => deleteTree(root.resolve(rel)))
+        throw new FrontierStore.CommitConflictException(m.snapshotId, e)
+    } finally Files.deleteIfExists(tmp)
     m
   }
+
+  private def dataPaths(m: Manifest): Seq[String] =
+    (m.articlesPath ++ m.seenDeltaPath ++ m.bloomPath ++ m.errorsPath).toSeq
 
   // ---------------------------------------------------------------- commit
 
   /** Commit one tick's results as the next snapshot.
     *
+    * Each input is evaluated by exactly one write, and nothing is persisted
+    * here: the error rows and the articles are counted by an Observation on
+    * their own writes, the seen delta is read back from the written
+    * articles (declared schema, one column), its per-segment counts come
+    * from the Bloom build's output, and the manifest totals are one
+    * aggregate over `stats`. A write that produced zero rows leaves no
+    * directory, so an idle tick commits a manifest with no data paths.
+    * Pass the tick's cached frames (CrawlTick.runTick) and release them
+    * after the commit.
+    *
     * @param emitted  CrawlResult-shaped rows (must carry canonical_url,
     *                 source, language; a `dt` partition column is derived
     *                 from fetchEpoch — deterministic, no wall clock)
     * @param stats    per-source (new_articles, skipped, errors)
+    * @throws FrontierStore.CommitConflictException when another writer
+    *         committed the same snapshot id first; nothing of this attempt
+    *         stays behind
     */
   def commit(spark: SparkSession, emitted: DataFrame, stats: DataFrame,
       fetchEpoch: Long, errors: Option[DataFrame] = None): Manifest = {
     init()
     val id = snapshotIds().lastOption.map(_ + 1).getOrElse(0)
     val parent = id - 1
+    beforeCommitWrites(id)
 
     // error-row lineage (C5): failed fetches persist with the snapshot —
     // written before the manifest, invisible until the manifest lands
     val errorsRel = errors.flatMap { e =>
-      val persisted = e.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = persisted.count()
-      val rel =
-        if (n == 0L) None
-        else {
-          val r = s"data/errors/snap-$id"
-          persisted.write.mode(SaveMode.Overwrite)
-            .parquet(root.resolve(r).toString)
-          Some(r)
-        }
-      persisted.unpersist(blocking = false)
-      rel
+      val rel = newDataRel("errors", id)
+      val n = writeCounted(
+          e.select(errSchema.fields.map(f => col(f.name).cast(f.dataType)): _*),
+          rel) { (df, path) =>
+        df.write.parquet(path)
+      }
+      if (n == 0L) None else Some(rel)
     }
 
-    // one materialization point feeds the row-count gate, the article
-    // write and the seen delta
-    val persisted = emitted.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = persisted.count()
+    // article data: partitioned by dt (epoch-derived), clustered within
+    // partitions by (source, language) for min/max row-group skipping (O2)
+    val aRel = newDataRel("articles", id)
+    val dt = date_format(
+      to_utc_timestamp(timestamp_seconds(lit(1735689600L) + lit(fetchEpoch) * 300),
+        "UTC"), "yyyy-MM-dd")
+    val nRows = writeCounted(emitted, aRel) { (df, path) =>
+      df.withColumn("dt", dt)
+        .repartition(col("dt"))
+        .sortWithinPartitions("source", "language")
+        .write
+        .partitionBy("dt")
+        .parquet(path)
+    }
 
+    // delta blooms must stay merge-compatible with the chain's compaction
+    // baseline → read the dial from the parent chain
+    val dial =
+      if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
     val (articlesRel, seenRel, bloomRel, segCounts) =
       if (nRows == 0L) (None, None, None, Map.empty[Int, Long])
       else {
-        // article data: partitioned by dt (epoch-derived), clustered within
-        // partitions by (source, language) for min/max row-group skipping (O2)
-        val aRel = s"data/articles/snap-$id"
-        val dt = date_format(
-          to_utc_timestamp(timestamp_seconds(lit(1735689600L) + lit(fetchEpoch) * 300),
-            "UTC"), "yyyy-MM-dd")
-        persisted
-          .withColumn("dt", dt)
-          .repartition(col("dt"))
-          .sortWithinPartitions("source", "language")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("dt")
+        val urls = spark.read.schema(articleKeySchema)
           .parquet(root.resolve(aRel).toString)
-
-        // delta blooms must stay merge-compatible with the chain's
-        // compaction baseline → read the dial from the parent chain
-        val dial =
-          if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
-        val (sRel, bRel, counts) = writeSeenDelta(spark, persisted, id, dial)
+        val (sRel, bRel, counts) = writeSeenDelta(spark, urls, id, dial)
         (Some(aRel), Some(sRel), Some(bRel), counts)
       }
 
     val totals = stats.agg(
       sum("new_articles"), sum("skipped"), sum("errors")).collect()(0)
     def tl(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
-    persisted.unpersist(blocking = false)
 
-    val dialUsed =
-      if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
-    writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dialUsed,
+    writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dial,
       articlesRel, seenRel, bloomRel, errorsRel, segCounts,
       tl(0), tl(1), tl(2),
       fileStats = articlesRel.map(collectFileStats).getOrElse(Nil)))
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
+  /** Reads one parquet file's footer on the driver (a few KB; no data
+    * page is read). */
+  private def withFooter[T](p: Path)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri),
+        new org.apache.hadoop.conf.Configuration()))
+    try f(reader.getFooter) finally reader.close()
   }
 
   /** Harvest per-file `source` column bounds from the parquet FOOTERS of
@@ -375,18 +449,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * file — even its footer — is opened again.
     */
   private def collectFileStats(rel: String)
-      : Seq[FrontierStore.FileStat] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val base = root.resolve(rel)
-    Files.walk(base).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
+      : Seq[FrontierStore.FileStat] =
+    parquetFiles(root.resolve(rel))
       .map { p =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
+        withFooter(p) { footer =>
+          val blocks = footer.getBlocks.asScala
           val rows = blocks.map(_.getRowCount).sum
           val chunkStats = blocks.flatMap(_.getColumns.asScala)
             .filter(_.getPath.toDotString == "source")
@@ -414,9 +481,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
             if (!trustworthy || mins.isEmpty) "" else mins.min,
             if (!trustworthy || maxs.isEmpty) "" else maxs.max,
             rows)
-        } finally reader.close()
-      }.toSeq.sortBy(_.path)
-  }
+        }
+      }.sortBy(_.path)
 
   /** [[articles]] restricted to one source, with MANIFEST-stats file
     * pruning (the Iceberg data-skipping read path): a data file is opened
@@ -527,12 +593,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val (rel, counts) =
       if (n == 0L) (None, Map.empty[Int, Long])
       else {
-        val r = s"data/seen/snap-$id" // same layout/namespace as add deltas
+        val r = newDataRel("seen", id) // same layout/namespace as add deltas
         actual.repartition(col("seg"))
-          .write.mode(SaveMode.Overwrite)
+          .write
           .partitionBy("seg")
           .parquet(root.resolve(r).toString)
-        val c = spark.read.parquet(root.resolve(r).toString)
+        val c = readSeenDir(spark, r)
           .groupBy("seg").count().collect()
           .map(row => row.getInt(0) -> row.getLong(1)).toMap
         (Some(r), c)
@@ -603,11 +669,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val folded = articleChain(latestId).filter(_.articlesPath.nonEmpty)
     require(folded.nonEmpty, "no article snapshots to compact")
     val id = latestId + 1
-    val rel = s"data/articles/snap-$id"
+    val rel = newDataRel("articles", id)
     articlesWithTick(spark, Some(latestId))
       .repartition(col("dt"))
       .sortWithinPartitions("source", "language")
-      .write.mode(SaveMode.Overwrite)
+      .write
       .partitionBy("dt")
       .parquet(root.resolve(rel).toString)
     val rewritten = folded.map(m => parquetFileCount(m.articlesPath.get)).sum
@@ -621,8 +687,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   /** Parquet data files under a store-relative path (manifest lineage). */
   private def parquetFileCount(rel: String): Long =
-    Files.walk(root.resolve(rel)).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet")).toLong
+    parquetFiles(root.resolve(rel)).size.toLong
 
   // ------------------------------------------------------------ snapshot GC
 
@@ -690,8 +755,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       if (Files.exists(dir)) {
         Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
           .foreach { p => files += 1; bytes += Files.size(p) }
-        Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+        deleteTree(dir)
         dirs += 1
       }
     }
@@ -707,9 +771,9 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   /** Iceberg `remove_orphan_files`: delete data directories under
     * `data/<table>/snap-*` that NO manifest references — the debris of a
-    * crashed commit, which writes its parquet before the manifest
-    * ATOMIC_MOVE lands (the commit point). Also sweeps stale `.snap-*.tmp`
-    * manifest temp files.
+    * crashed commit, which writes its parquet before the manifest link
+    * lands (the commit point). Also sweeps stale `.snap-*.tmp` manifest
+    * temp files.
     *
     * The grace window (`olderThanMs`, Iceberg's `older_than`) is what makes
     * this safe against IN-FLIGHT commits: a concurrent writer's data dirs
@@ -744,8 +808,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       else {
         Files.walk(snap).iterator().asScala.filter(Files.isRegularFile(_))
           .foreach { p => files += 1; bytes += Files.size(p) }
-        Files.walk(snap).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+        deleteTree(snap)
         dirs += 1
       }
     }
@@ -762,6 +825,22 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   private val seenSchema = StructType(Seq(
     StructField("canonical_url", StringType)))
+
+  // Declared file schemas of the store's own tables: reads skip footer
+  // inference. `seg` is the seen table's partition column.
+  private val seenFileSchema = seenSchema.add(StructField("seg", IntegerType))
+  private val bloomSchema = StructType(Seq(
+    StructField("seg", LongType), StructField("bloom", BinaryType)))
+  private val errSchema = StructType(Seq(
+    StructField("canonical_url", StringType),
+    StructField("source", StringType),
+    StructField("item_idx", IntegerType),
+    StructField("reason", StringType)))
+  /** The one article column the seen delta is read back with. */
+  private val articleKeySchema = seenSchema
+
+  private def readSeenDir(spark: SparkSession, rel: String): DataFrame =
+    spark.read.schema(seenFileSchema).parquet(root.resolve(rel).toString)
 
   /** URL-seen state as of snapshot `asOf` (default: latest): union of the
     * seen deltas back to the nearest compaction baseline. One column
@@ -784,13 +863,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     else if (!ms.exists(_.kind == KindRetraction))
       // one read per snapshot dir, unioned: each dir is its own partitioned
       // root (seg=N subdirs), so a single multi-path read would mis-infer
-      ms.map(m => spark.read
-          .parquet(root.resolve(m.seenDeltaPath.get).toString)
+      ms.map(m => readSeenDir(spark, m.seenDeltaPath.get)
           .select("canonical_url"))
         .reduce(_ unionByName _)
     else {
       val events = ms.map { m =>
-        spark.read.parquet(root.resolve(m.seenDeltaPath.get).toString)
+        readSeenDir(spark, m.seenDeltaPath.get)
           .select(col("canonical_url"),
             lit(m.snapshotId).as("__snap"),
             lit(m.kind != KindRetraction).as("__add"))
@@ -810,6 +888,47 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   def seenDeltaPaths(id: Int): Seq[String] =
     seenChain(id).flatMap(_.seenDeltaPath).map(p => root.resolve(p).toString)
 
+  /** The Bloom dirs of the seen chain as of `asOf` (absolute paths). */
+  private def bloomDirs(asOf: Option[Int]): Seq[Path] = {
+    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
+      .getOrElse(throw new IllegalStateException("empty store")))
+    seenChain(id).flatMap(_.bloomPath).map(root.resolve)
+  }
+
+  /** The per-delta Bloom rows (seg, bloom) of the seen chain as of `asOf`,
+    * NOT merged: one row per segment per delta since the last compaction.
+    * A scan with no shuffle, so collecting it is one Spark job.
+    */
+  private def bloomDeltas(spark: SparkSession, asOf: Option[Int]): DataFrame =
+    bloomDirs(asOf) match {
+      case Nil => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bloomSchema)
+      case dirs => dirs.map(d => spark.read.schema(bloomSchema)
+        .parquet(d.toString)).reduce(_ unionByName _)
+    }
+
+  /** Uncompressed bytes of the Bloom files behind [[bloomDeltas]], summed
+    * from their parquet footers — no Spark job. It is what the broadcast
+    * probe collects to the driver before merging, so it is what the probe
+    * dispatch compares. (The compressed file size would not do: a lightly
+    * loaded filter is mostly zero bytes and compresses far below its
+    * in-memory size.)
+    */
+  private def bloomBytes(asOf: Option[Int]): Long =
+    bloomDirs(asOf).flatMap(parquetFiles)
+      .map(p => withFooter(p)(_.getBlocks.asScala.map(_.getTotalByteSize).sum))
+      .sum
+
+  /** The production seen probe as of `asOf`: the unmerged [[bloomDeltas]]
+    * (the probe OR-merges them where it loads them) plus the exact
+    * [[seen]] table, dispatched on [[bloomBytes]] — no Spark job before the
+    * probe itself.
+    */
+  def bloomProbe(spark: SparkSession, asOf: Option[Int] = None)
+      : graft.seen.SeenProbe.BloomConfirm =
+    graft.seen.SeenProbe.BloomConfirm(bloomDeltas(spark, asOf),
+      seen(spark, asOf), nSegments, segmentBytes = Some(bloomBytes(asOf)))
+
   /** OR-merged Bloom segments as of `asOf` — ready for
     * UrlSeen.filterUnseen, bitwise identical to rebuilding from the full
     * seen set (Bloom bit-union = key-union; equality asserted in
@@ -817,18 +936,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * small binary rows; no URL is rehashed.
     */
   def segments(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
-    val paths = seenChain(id).flatMap(_.bloomPath)
-      .map(p => root.resolve(p).toString)
-    val bloomSchema = StructType(Seq(
-      StructField("seg", LongType), StructField("bloom", BinaryType)))
-    if (paths.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bloomSchema)
-    val all = paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
     import spark.implicits._
-    all.select(col("seg").cast("long"), col("bloom")).as[(Long, Array[Byte])]
+    bloomDeltas(spark, asOf).as[(Long, Array[Byte])]
       .groupByKey(_._1)
       .mapGroups { (seg, it) =>
         val merged = it.map(_._2).reduce(graft.seen.BloomFilter.mergeSerialized)
@@ -846,15 +955,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       .getOrElse(throw new IllegalStateException("empty store")))
     val paths = chain(id).flatMap(_.errorsPath)
       .map(p => root.resolve(p).toString)
-    val errSchema = StructType(Seq(
-      StructField("canonical_url", StringType),
-      StructField("source", StringType),
-      StructField("item_idx", org.apache.spark.sql.types.IntegerType),
-      StructField("reason", StringType)))
     if (paths.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], errSchema)
-    else paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
+    else paths.map(p => spark.read.schema(errSchema).parquet(p))
+      .reduce(_ unionByName _)
   }
 
   /** Articles as of snapshot `asOf` (default: latest) — time-travel read.
@@ -990,14 +1095,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seenSchema)
     else
-      paths.map(p => spark.read.parquet(p).select("canonical_url"))
+      paths.map(p => spark.read.schema(seenFileSchema).parquet(p)
+          .select("canonical_url"))
         .reduce(_ unionByName _)
   }
 
-  def delete(): Unit =
-    if (Files.exists(root))
-      Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+  def delete(): Unit = deleteTree(root)
 }
 
 object FrontierStore {
@@ -1005,6 +1108,12 @@ object FrontierStore {
   val KindCompaction = "compaction"
   val KindRetraction = "retraction" // seen-set retraction (recrawl/refresh)
   val KindArticleCompaction = "article_compaction" // small-file rewrite
+
+  /** A racing writer committed snapshot `id` first. */
+  final class CommitConflictException(id: Int, cause: Throwable)
+    extends IllegalStateException(
+      s"snapshot $id was committed by another writer; this attempt's data " +
+        "was removed and nothing of it is visible", cause)
 
   final case class Manifest(
       snapshotId: Int,

@@ -23,4 +23,11 @@ object Bridge {
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`), so a listener's counters are
+    * complete for the work that already ran.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -752,4 +752,57 @@ class FrontierStoreSpec extends SparkTestBase {
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(folded === before)
   }
+
+  test("racing writers: a second commit of the same snapshot id throws, " +
+      "leaves nothing behind, and the winner's reads are unchanged") {
+    import spark.implicits._
+    val dir = "target/test-store-race"
+    new FrontierStore(dir).delete()
+    val loser = new FrontierStore(dir).init()
+    loser.initSeen(spark,
+      Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+        .toDF().select("canonical_url"))
+    val winner = new FrontierStore(dir)
+    val (l0, sources, robots, pages) = fixtures(0)
+    val (l1, _, _, _) = fixtures(1)
+    def tick(store: FrontierStore, listings: org.apache.spark.sql.DataFrame) =
+      CrawlTick.runTick(spark, listings, sources.toDF(), store.bloomProbe(spark),
+        robots.toDF(), pages.toDF(), salted = false)
+    def reads(store: FrontierStore, id: Int) = (
+      store.articles(spark, Some(id))
+        .select("canonical_url", "source", "emit_idx")
+        .as[(String, String, Long)].collect().toSet,
+      store.seen(spark, Some(id)).as[String].collect().toSet,
+      store.errors(spark, Some(id)).select("canonical_url").as[String]
+        .collect().toSet,
+      store.segments(spark, Some(id)).as[(Long, Array[Byte])].collect()
+        .map { case (s, b) => s -> b.toSeq }.toMap)
+
+    // the loser plans its tick on snapshot 0; the winner commits snapshot 1
+    // after the loser picked that id and before it writes anything
+    val tLoser = tick(loser, l0.toDF())
+    var winnerReads: Option[Any] = None
+    loser.beforeCommitWrites = { id =>
+      loser.beforeCommitWrites = _ => ()
+      val t = tick(winner, l1.toDF())
+      val m = winner.commit(spark, t.emitted, t.stats, fetchEpoch = 1L,
+        errors = Some(t.errors))
+      t.cleanup()
+      assert(m.snapshotId === id)
+      winnerReads = Some(reads(winner, id))
+    }
+    intercept[FrontierStore.CommitConflictException] {
+      loser.commit(spark, tLoser.emitted, tLoser.stats, fetchEpoch = 0L,
+        errors = Some(tLoser.errors))
+    }
+    tLoser.cleanup()
+
+    assert(winnerReads.nonEmpty, "the racing commit never ran")
+    assert(loser.snapshotIds() === Seq(0, 1))
+    assert(loser.manifest(1).fetchEpoch === 1L, "the winner's manifest was replaced")
+    assert(Some(reads(new FrontierStore(dir), 1)) === winnerReads)
+    // the losing attempt removed its own data directories
+    val orphans = new FrontierStore(dir).removeOrphanFiles(olderThanMs = 0L)
+    assert(orphans.dirsDeleted === 0)
+  }
 }
