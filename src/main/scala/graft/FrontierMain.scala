@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLongArray
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -49,12 +50,15 @@ import graft.store.FrontierStore
   * Each external input is opened once per run; listings are filtered per
   * tick on their `tick` column when one exists.
   *
-  * The session runs with [[SessionConf]]; no shuffle-partition count is
+  * The session is built with [[BuildConf]] (a codegen cache that holds the
+  * loop's generated classes, so a steady tick compiles only what is new to
+  * it) and runs with [[SessionConf]]; no shuffle-partition count is
   * pinned, so AQE sizes every shuffle, cached ones included, to its data.
   *
   * One JSON metrics line per tick on stdout (snapshot id, rows, dedup
-  * counters, wall seconds, and the Spark `jobs`, `stages` and `tasks`
-  * that tick ran) — the structured-metrics contract.
+  * counters, wall seconds, the Spark `jobs`, `stages` and `tasks` that
+  * tick ran, and the generated classes it `compiles`) — the
+  * structured-metrics contract.
   *
   * `--compact-every=K` runs BOTH maintenance actions every K ticks: the
   * seen-chain fold (`compact`) and the article small-file rewrite
@@ -89,6 +93,28 @@ object FrontierMain {
   val SessionConf: Map[String, String] = Map(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
+  /** Settings fixed when the session is built (static SQL settings, which
+    * `spark.conf.set` rejects), so the tick loop reuses its compiled code.
+    *
+    * `spark.sql.codegen.cache.maxEntries` bounds Spark's LRU cache of
+    * Janino-compiled classes (default 100). Measured over the 107-source
+    * registry inputs with an unbounded cache: the first tick plus its
+    * commit compiles 114 distinct classes, session setup (initSeen) 27,
+    * and an 8-tick run with a maintenance cycle (retract, compact,
+    * compactArticles, expire) every 2 ticks compiles 322 in all. At the
+    * default 100 the LRU cycles through the tick's set, so every steady
+    * tick compiles 130-145 classes again. A tick on a longer uncompacted
+    * seen chain also compiles 20-24 new variants (the chain's union gains
+    * a branch, which renumbers the codegen stages after it); they go cold
+    * on the next tick, and a compaction resets the chain. 512 holds the
+    * whole working set plus ~9 ticks of such variants, so a class used
+    * every tick, or every maintenance cycle up to that spacing, is never
+    * the least recently used one and a steady tick compiles only its new
+    * variants.
+    */
+  val BuildConf: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "512")
+
   /** Counts Spark jobs started, stages completed and tasks ended. */
   final class SparkCounters extends SparkListener {
     private val n = new AtomicLongArray(3)
@@ -103,6 +129,10 @@ object FrontierMain {
       (n.get(0), n.get(1), n.get(2))
     }
   }
+
+  /** Generated classes Janino compiled in this JVM so far. A class found
+    * in the codegen cache is not compiled again and does not count. */
+  def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def flag(args: Array[String], name: String): Option[String] =
     args.collectFirst {
@@ -135,6 +165,7 @@ object FrontierMain {
     val builder = SparkSession.builder()
       .appName("graft-frontier")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(BuildConf)
       .config(SessionConf)
     val spark = (if (sys.props.get("spark.master").isEmpty)
         builder.master("local[*]") else builder)
@@ -167,6 +198,7 @@ object FrontierMain {
     (startTick until startTick + nTicks).foreach { tick =>
       val t0 = System.nanoTime()
       val (jobs0, stages0, tasks0) = counters.snapshot(spark.sparkContext)
+      val compiles0 = codegenCompiles()
       val listings = listingsAll.map { df =>
         // external multi-tick listing dumps carry a `tick` column; prune it
         if (df.columns.contains("tick"))
@@ -207,11 +239,12 @@ object FrontierMain {
       invRelease()
       t.cleanup() // release the tick's cached intermediates (ADVICE r1)
       val (jobs1, stages1, tasks1) = counters.snapshot(spark.sparkContext)
+      val compiles = codegenCompiles() - compiles0
       val sec = (System.nanoTime() - t0) / 1e9
       val invJson =
         if (checkInvariants) s""","invariant_violations":$nViolations""" else ""
       println(
-        s"""{"tick":$tick,"snapshot":${m.snapshotId},"new_articles":${m.newArticles},"skipped":${m.skipped},"errors":${m.errors},"segments":${m.segmentCounts.size},"probe":"${if (exactProbe) "exact" else "bloom"}"$invJson,"jobs":${jobs1 - jobs0},"stages":${stages1 - stages0},"tasks":${tasks1 - tasks0},"sec":${f"$sec%.2f"}}""")
+        s"""{"tick":$tick,"snapshot":${m.snapshotId},"new_articles":${m.newArticles},"skipped":${m.skipped},"errors":${m.errors},"segments":${m.segmentCounts.size},"probe":"${if (exactProbe) "exact" else "bloom"}"$invJson,"jobs":${jobs1 - jobs0},"stages":${stages1 - stages0},"tasks":${tasks1 - tasks0},"compiles":$compiles,"sec":${f"$sec%.2f"}}""")
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {
         import org.apache.spark.sql.functions.{col, lit}
         // age basis = the committing TICK (crawl_tick), not the per-host

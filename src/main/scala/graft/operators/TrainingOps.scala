@@ -2213,7 +2213,8 @@ object TrainingOps {
     * would leak one cached frame per invocation with no release hook to
     * hand back. The REFINEMENT itself (the per-iteration argmin + mean
     * aggregates) still runs as the distributed plan; only its nlist-row
-    * output lands on the driver.
+    * output lands on the driver, and re-enters the plan as a local
+    * relation (no RDD scan).
     */
   def ivfKmeansTopKFrom(e: DataFrame,
       centroidStride: Long = IvfCentroidStride,
@@ -2223,9 +2224,8 @@ object TrainingOps {
       : DataFrame = {
     val refined = ivfKmeansCentroidsFrom(e, centroidStride, iters)
     val rows = refined.collect()
-    val spark = e.sparkSession
-    val cents = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), refined.schema)
+    val cents = e.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), refined.schema)
     ivfTopKWithCents(e, cents, rows.length.toLong, nprobe,
       maxProbeBroadcastBytes)
   }

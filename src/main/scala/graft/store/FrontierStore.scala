@@ -124,6 +124,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
        |  "articles_path": ${optStr(m.articlesPath)},
        |  "seen_delta_path": ${optStr(m.seenDeltaPath)},
        |  "bloom_path": ${optStr(m.bloomPath)},
+       |  "bloom_bytes": ${m.bloomBytes.getOrElse("null")},
        |  "errors_path": ${optStr(m.errorsPath)},
        |  "segment_counts": $segs,
        |  "files_rewritten": ${m.filesRewritten},
@@ -151,6 +152,10 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json)
         .map(_.group(1).toLong).getOrElse(0L)
     val bloomItems = numOpt("bloom_items_per_segment")
+    // optional (absent in manifests written before it was recorded, null
+    // on snapshots without a Bloom dir): None reads the Bloom footers
+    val bloomBytes = s""""bloom_bytes"\\s*:\\s*(\\d+)""".r
+      .findFirstMatchIn(json).map(_.group(1).toLong)
     // optional (absent in pre-stats manifests): per-file column bounds.
     // The array is rendered on one line (the encoder escapes every control
     // character); GREEDY `.*` (no DOTALL; `(?d)`: only '\n' ends a line)
@@ -177,6 +182,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       articlesPath = str("articles_path"),
       seenDeltaPath = str("seen_delta_path"),
       bloomPath = str("bloom_path"),
+      bloomBytes = bloomBytes,
       errorsPath = str("errors_path"),
       segmentCounts = segs,
       newArticles = num("new_articles"),
@@ -291,11 +297,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   }
 
   /** Writes the seen delta + its per-segment Bloom for snapshot `id`.
-    * Returns (seenRel, bloomRel, segmentCounts); the counts come from the
-    * Bloom build's own output, observed on its write.
+    * Returns the two paths, the per-segment counts and the Bloom bytes
+    * (summed filter lengths, what the broadcast probe collects); both come
+    * from the Bloom build's own output, observed on its write.
     */
   private def writeSeenDelta(spark: SparkSession, urls: DataFrame, id: Int,
-      itemsPerSegment: Long): (String, String, Map[Int, Long]) = {
+      itemsPerSegment: Long): SeenDelta = {
     val seenRel = newDataRel("seen", id)
     urls.select(col("canonical_url"))
       .withColumn("seg", segOf(col("canonical_url")))
@@ -312,14 +319,18 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     graft.seen.UrlSeen.buildSegmentsCounted(readSeenDir(spark, seenRel),
         "canonical_url", nSegments, itemsPerSegment, bloomFpp)
       .observe(obs,
-        map_from_entries(collect_list(struct(col("seg"), col("n")))).as("counts"))
+        map_from_entries(collect_list(struct(col("seg"), col("n")))).as("counts"),
+        coalesce(sum(length(col("bloom"))), lit(0L)).as("bytes"))
       .select("seg", "bloom")
       .write
       .parquet(root.resolve(bloomRel).toString)
     val segCounts = obs.get("counts").asInstanceOf[scala.collection.Map[Long, Long]]
       .map { case (s, n) => s.toInt -> n }.toMap
-    (seenRel, bloomRel, segCounts)
+    SeenDelta(seenRel, bloomRel, segCounts, obs.get("bytes").asInstanceOf[Long])
   }
+
+  private case class SeenDelta(seenRel: String, bloomRel: String,
+      segCounts: Map[Int, Long], bloomBytes: Long)
 
   /** Test seam: runs after [[commit]] picks its snapshot id and before it
     * writes anything, so a spec can interleave a second writer.
@@ -407,28 +418,30 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     // baseline → read the dial from the parent chain
     val dial =
       if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
-    val (articlesRel, seenRel, bloomRel, segCounts) =
-      if (nRows == 0L) (None, None, None, Map.empty[Int, Long])
-      else {
-        val urls = spark.read.schema(articleKeySchema)
-          .parquet(root.resolve(aRel).toString)
-        val (sRel, bRel, counts) = writeSeenDelta(spark, urls, id, dial)
-        (Some(aRel), Some(sRel), Some(bRel), counts)
-      }
+    val articlesRel = if (nRows == 0L) None else Some(aRel)
+    val delta = articlesRel.map(rel => writeSeenDelta(spark,
+      spark.read.schema(articleKeySchema).parquet(root.resolve(rel).toString),
+      id, dial))
 
     val totals = stats.agg(
       sum("new_articles"), sum("skipped"), sum("errors")).collect()(0)
     def tl(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
 
     writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dial,
-      articlesRel, seenRel, bloomRel, errorsRel, segCounts,
+      articlesRel, delta.map(_.seenRel), delta.map(_.bloomRel), errorsRel,
+      delta.map(_.segCounts).getOrElse(Map.empty),
       tl(0), tl(1), tl(2),
-      fileStats = articlesRel.map(collectFileStats).getOrElse(Nil)))
+      fileStats = articlesRel.map(collectFileStats).getOrElse(Nil),
+      bloomBytes = delta.map(_.bloomBytes)))
   }
 
   private def parquetFiles(dir: Path): Seq[Path] =
     Files.walk(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
+  /** One Hadoop configuration for every footer this store reads: each
+    * new one parses the XML resources again. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Reads one parquet file's footer on the driver (a few KB; no data
     * page is read). */
@@ -436,8 +449,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri),
-        new org.apache.hadoop.conf.Configuration()))
+        new org.apache.hadoop.fs.Path(p.toUri), hadoopConf))
     try f(reader.getFooter) finally reader.close()
   }
 
@@ -553,10 +565,10 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   def initSeen(spark: SparkSession, seen: DataFrame): Manifest = {
     init()
     require(snapshotIds().isEmpty, "initSeen on a non-empty store")
-    val (seenRel, bloomRel, segCounts) =
-      writeSeenDelta(spark, seen, 0, bloomItemsPerSegment)
+    val d = writeSeenDelta(spark, seen, 0, bloomItemsPerSegment)
     writeManifest(Manifest(0, -1, KindDelta, -1L, bloomItemsPerSegment,
-      None, Some(seenRel), Some(bloomRel), None, segCounts, 0L, 0L, 0L))
+      None, Some(d.seenRel), Some(d.bloomRel), None, d.segCounts, 0L, 0L, 0L,
+      bloomBytes = Some(d.bloomBytes)))
   }
 
   /** Commit a seen-set RETRACTION snapshot — recrawl/refresh: "treat these
@@ -634,10 +646,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val maxPerSegment = if (folded.isEmpty) 0L else folded.values.max
     val dial = math.max(bloomItemsPerSegment, maxPerSegment * 2L)
     val full = seen(spark, Some(latestId))
-    val (seenRel, bloomRel, segCounts) = writeSeenDelta(spark, full, id, dial)
+    val d = writeSeenDelta(spark, full, id, dial)
     val parentEpoch = manifest(latestId).fetchEpoch
     writeManifest(Manifest(id, latestId, KindCompaction, parentEpoch, dial,
-      None, Some(seenRel), Some(bloomRel), None, segCounts, 0L, 0L, 0L))
+      None, Some(d.seenRel), Some(d.bloomRel), None, d.segCounts, 0L, 0L, 0L,
+      bloomBytes = Some(d.bloomBytes)))
   }
 
   /** Article small-file compaction — the Iceberg `rewrite_data_files`
@@ -888,11 +901,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   def seenDeltaPaths(id: Int): Seq[String] =
     seenChain(id).flatMap(_.seenDeltaPath).map(p => root.resolve(p).toString)
 
-  /** The Bloom dirs of the seen chain as of `asOf` (absolute paths). */
-  private def bloomDirs(asOf: Option[Int]): Seq[Path] = {
+  /** The manifests of the seen chain as of `asOf` that carry a Bloom dir. */
+  private def bloomSnapshots(asOf: Option[Int]): Seq[Manifest] = {
     val id = checkGc(asOf.orElse(snapshotIds().lastOption)
       .getOrElse(throw new IllegalStateException("empty store")))
-    seenChain(id).flatMap(_.bloomPath).map(root.resolve)
+    seenChain(id).filter(_.bloomPath.nonEmpty)
   }
 
   /** The per-delta Bloom rows (seg, bloom) of the seen chain as of `asOf`,
@@ -900,24 +913,27 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * A scan with no shuffle, so collecting it is one Spark job.
     */
   private def bloomDeltas(spark: SparkSession, asOf: Option[Int]): DataFrame =
-    bloomDirs(asOf) match {
+    bloomSnapshots(asOf).flatMap(_.bloomPath) match {
       case Nil => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bloomSchema)
-      case dirs => dirs.map(d => spark.read.schema(bloomSchema)
-        .parquet(d.toString)).reduce(_ unionByName _)
+      case rels => rels.map(r => spark.read.schema(bloomSchema)
+        .parquet(root.resolve(r).toString)).reduce(_ unionByName _)
     }
 
-  /** Uncompressed bytes of the Bloom files behind [[bloomDeltas]], summed
-    * from their parquet footers — no Spark job. It is what the broadcast
-    * probe collects to the driver before merging, so it is what the probe
-    * dispatch compares. (The compressed file size would not do: a lightly
-    * loaded filter is mostly zero bytes and compresses far below its
-    * in-memory size.)
+  /** Bytes of the Bloom filters behind [[bloomDeltas]] — what the
+    * broadcast probe collects to the driver before merging, so what the
+    * probe dispatch compares. Each snapshot's manifest records its
+    * filters' summed length; a manifest written before that was recorded
+    * falls back to its files' uncompressed parquet footer sizes. (The
+    * compressed file size would not do: a lightly loaded filter is mostly
+    * zero bytes and compresses far below its in-memory size.) No Spark
+    * job either way.
     */
   private def bloomBytes(asOf: Option[Int]): Long =
-    bloomDirs(asOf).flatMap(parquetFiles)
-      .map(p => withFooter(p)(_.getBlocks.asScala.map(_.getTotalByteSize).sum))
-      .sum
+    bloomSnapshots(asOf).map(m => m.bloomBytes.getOrElse(
+      parquetFiles(root.resolve(m.bloomPath.get))
+        .map(p => withFooter(p)(_.getBlocks.asScala.map(_.getTotalByteSize).sum))
+        .sum)).sum
 
   /** The production seen probe as of `asOf`: the unmerged [[bloomDeltas]]
     * (the probe OR-merges them where it loads them) plus the exact
@@ -1139,7 +1155,11 @@ object FrontierStore {
       // planning-time zone map [[FrontierStore.articlesForSource]] prunes
       // with — no footer is opened for a skipped file. Empty on pre-stats
       // manifests and non-article snapshots.
-      fileStats: Seq[FrontierStore.FileStat] = Nil)
+      fileStats: Seq[FrontierStore.FileStat] = Nil,
+      // summed length of this snapshot's Bloom filters (the probe
+      // dispatch's size); None without a Bloom dir, or when the manifest
+      // predates the field (the store reads the Bloom footers instead)
+      bloomBytes: Option[Long] = None)
 
   /** Column bounds of one article data file, harvested from its parquet
     * FOOTER statistics at commit time (the same min/max the row-group

@@ -753,6 +753,99 @@ class FrontierStoreSpec extends SparkTestBase {
     assert(folded === before)
   }
 
+  test("bloom_bytes: every Bloom snapshot records its filters' length, the " +
+      "probe sizes from manifests without opening a footer, and manifests " +
+      "without the key fall back to the footers with the same dispatch") {
+    import spark.implicits._
+    import java.nio.file.{Files, Path, Paths}
+    val dir = "target/test-store-bloom-bytes"
+    new FrontierStore(dir).delete()
+    val store = new FrontierStore(dir).init()
+    val (l0, sources, robots, pages) = fixtures(0)
+    val (l1, _, _, _) = fixtures(1)
+    def tick(s: FrontierStore, listings: org.apache.spark.sql.DataFrame) =
+      CrawlTick.runTick(spark, listings, sources.toDF(), s.bloomProbe(spark),
+        robots.toDF(), pages.toDF(), salted = false)
+    def commitTick(listings: org.apache.spark.sql.DataFrame, epoch: Long) = {
+      val t = tick(store, listings)
+      val m = store.commit(spark, t.emitted, t.stats, fetchEpoch = epoch)
+      t.cleanup()
+      m
+    }
+    // initSeen, commit, compact and a post-compaction commit each write
+    // Bloom files; the article compaction writes none
+    val written = Seq(
+      store.initSeen(spark, Fixtures.urlSeenSeed(spark, nSources,
+        Fixtures.DefaultPreSeen).toDF().select("canonical_url")),
+      commitTick(l0.toDF(), 0L),
+      store.compact(spark),
+      store.compactArticles(spark),
+      commitTick(l1.toDF(), 1L))
+    written.foreach { m =>
+      assert(store.manifest(m.snapshotId) === m, "manifest round trip")
+      val expected = m.bloomPath.map(p => spark.read.parquet(s"$dir/$p")
+        .agg(sum(length(col("bloom")))).as[Long].head())
+      assert(m.bloomBytes === expected, s"snapshot ${m.snapshotId}")
+    }
+    val latest = written.last.snapshotId
+    val chainBytes = store.seenChain(latest).flatMap(_.bloomBytes).sum
+    assert(store.seenChain(latest).size === 3 && chainBytes > 0L)
+    assert(store.bloomProbe(spark).segmentBytes === Some(chainBytes))
+
+    def copyStore(to: String)(edit: Path => Unit): FrontierStore = {
+      new FrontierStore(to).delete()
+      val src = Paths.get(dir)
+      Files.walk(src).forEach { p =>
+        val q = Paths.get(to).resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else { Files.copy(p, q); edit(q) }
+      }
+      new FrontierStore(to)
+    }
+    def isBloomFile(p: Path) = p.toString.contains("/data/bloom/") &&
+      p.getFileName.toString.endsWith(".parquet")
+    def isManifest(p: Path) = p.getFileName.toString.endsWith(".json") &&
+      p.getParent.getFileName.toString == "snapshots"
+    def stripKey(p: Path): Unit = if (isManifest(p))
+      Files.writeString(p, Files.readString(p)
+        .replaceAll("\\s*\"bloom_bytes\": [^,]*,", ""))
+
+    // manifests alone size the probe: unreadable Bloom footers change
+    // nothing, while the same files behind key-less manifests throw
+    def garbage(p: Path): Unit = if (isBloomFile(p))
+      Files.write(p, Array[Byte](1, 2, 3))
+    assert(copyStore(s"$dir-garbled")(garbage).bloomProbe(spark)
+      .segmentBytes === Some(chainBytes))
+    intercept[Exception] {
+      copyStore(s"$dir-garbled-legacy")(p => { garbage(p); stripKey(p) })
+        .bloomProbe(spark)
+    }
+
+    // key-less manifests (as written before the key existed) read None
+    // and size the probe from the footers: within 1% of the manifests,
+    // so the broadcast/co-partitioned dispatch agrees, and the next tick
+    // emits the same rows
+    val legacy = copyStore(s"$dir-legacy")(stripKey)
+    assert(legacy.snapshotIds().map(legacy.manifest(_).bloomBytes)
+      .forall(_.isEmpty))
+    val footerBytes = legacy.bloomProbe(spark).segmentBytes.get
+    assert(footerBytes >= chainBytes && footerBytes <= chainBytes * 101 / 100,
+      s"footer bytes $footerBytes vs manifest bytes $chainBytes")
+    val cap = graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes
+    assert((footerBytes <= cap) === (chainBytes <= cap))
+    def emits(s: FrontierStore) = {
+      val t = CrawlTick.runTick(spark, fixtures(2)._1.toDF(), sources.toDF(),
+        s.bloomProbe(spark), robots.toDF(),
+        Fixtures.pageStore(spark, nSources, maxTick = 2).toDF(), salted = false)
+      val out = t.emitted.select("canonical_url", "emit_idx")
+        .as[(String, Long)].collect().toSet
+      t.cleanup()
+      out
+    }
+    val fromLegacy = emits(legacy)
+    assert(fromLegacy.nonEmpty && fromLegacy === emits(store))
+  }
+
   test("racing writers: a second commit of the same snapshot id throws, " +
       "leaves nothing behind, and the winner's reads are unchanged") {
     import spark.implicits._

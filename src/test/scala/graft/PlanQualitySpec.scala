@@ -196,11 +196,18 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "re-enters the plan as a local relation") {
     val pq = SparkEntry.queries.keys.filter(_.matches("q_emb_.*pq.*")).toSeq
     assert(pq.size == 7, pq)
-    for (name <- pq.sorted) {
-      val p = planString(SparkEntry.queries(name)(spark, sf()))
-      assert(!p.contains("LogicalRDD") && !p.contains("Scan ExistingRDD"),
-        s"$name plans over an RDD:\n" + p)
-    }
+    pq.sorted.foreach(assertNoRdd)
+  }
+
+  test("IVF k-means: no plan reads an RDD — the Lloyd-refined centroids " +
+      "re-enter the plan as a local relation") {
+    assertNoRdd("q_emb_ivf_kmeans_topk")
+  }
+
+  private def assertNoRdd(query: String): Unit = {
+    val p = planString(SparkEntry.queries(query)(spark, sf()))
+    assert(!p.contains("LogicalRDD") && !p.contains("Scan ExistingRDD"),
+      s"$query plans over an RDD:\n" + p)
   }
 
   test("IVF probe join is size-dispatched: broadcast by default, " +

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (getOrCreate reuses the
-  * first), UTC-pinned, AQE on — mirrors the driver's Verify/Bench configs.
+  * first), UTC-pinned, AQE on — mirrors the driver's Verify/Bench configs —
+  * and built with FrontierMain's build-time settings (the codegen cache
+  * size), which cannot be set once the session exists.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -14,6 +16,7 @@ trait SparkTestBase extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.ui.enabled", "false")
+    .config(FrontierMain.BuildConf)
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"

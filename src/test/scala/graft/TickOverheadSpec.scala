@@ -14,7 +14,9 @@ import graft.store.FrontierStore
 /** FrontierMain's tick under its own session settings: a fixture tick plus
   * commit at the default 200 shuffle partitions must size every stage to
   * the data (no stage runs 200 tasks), stay exact against the simulator,
-  * and an idle tick must still commit a manifest with no data paths.
+  * and an idle tick must still commit a manifest with no data paths. The
+  * shared test session is built with FrontierMain.BuildConf, so a repeated
+  * tick finds its generated classes in the codegen cache.
   */
 class TickOverheadSpec extends SparkTestBase {
 
@@ -82,18 +84,46 @@ class TickOverheadSpec extends SparkTestBase {
     m
   }
 
+  /** Upper bound on the classes a repeated fixture tick + commit may
+    * compile. Measured: 0 with the cache at FrontierMain.BuildConf's size,
+    * 138 (all of them again) at Spark's default of 100 entries. */
+  private val WarmTickCompiles = 10L
+
   test("a fixture tick + commit at 200 shuffle partitions matches " +
       "RefSimulator and runs no 200-task stage") {
-    import spark.implicits._
-    val (listings, sources, robots, pages, seed) = fx
     val store = freshStore()
     val (m, tasks) = withTickSession {
-      stageTasks(tickAndCommit(store, listings.toDF(), 0))
+      stageTasks(tickAndCommit(store, fx._1.toDF(), 0))
     }
     assert(tasks.nonEmpty)
     assert(tasks.max < 200,
       s"a stage ran ${tasks.max} tasks; per-stage tasks: ${tasks.mkString(",")}")
+    assertMatchesSimulator(store, m)
+  }
 
+  test("a repeated fixture tick + commit over a fresh store compiles " +
+      "(almost) nothing: its classes stay in the codegen cache") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      FrontierMain.BuildConf("spark.sql.codegen.cache.maxEntries"))
+    val compiles = (1 to 2).map { _ =>
+      val store = freshStore()
+      val c0 = FrontierMain.codegenCompiles()
+      val m = withTickSession(tickAndCommit(store, fx._1.toDF(), 0))
+      val n = FrontierMain.codegenCompiles() - c0
+      assertMatchesSimulator(store, m)
+      n
+    }
+    info(s"classes compiled: first run ${compiles(0)}, second ${compiles(1)}")
+    assert(compiles(1) <= WarmTickCompiles,
+      s"the second tick compiled ${compiles(1)} classes (first: ${compiles(0)})")
+  }
+
+  /** Emits, totals, errors and the seen set of snapshot `m` equal the
+    * simulator's over the same fixture tick. */
+  private def assertMatchesSimulator(store: FrontierStore,
+      m: FrontierStore.Manifest): Unit = {
+    import spark.implicits._
+    val (listings, sources, robots, pages, seed) = fx
     val sim = RefSimulator.run(listings.collect().toSeq, sources,
       seed.collect().map(_.canonical_url).toSet, robots,
       pages.collect().map(p => p.canonical_url -> p).toMap)
